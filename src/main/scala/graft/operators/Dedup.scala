@@ -14,21 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Dev-only phase timing (SPARK_GRAFT_DEDUP_TIMING=1): brackets the
-    * pipeline's internal actions so a bench regression can be
-    * attributed to a stage instead of a query total. Zero cost when
-    * unset. */
-  private val timingOn = sys.env.get("SPARK_GRAFT_DEDUP_TIMING").contains("1")
-  private def timed[T](label: String)(f: => T): T =
-    if (!timingOn) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[dedup-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** Exact dedup: keep the lowest-id document per normalized-content
     * fingerprint. One shuffle on the 64-bit fingerprint. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -386,195 +371,177 @@ object Dedup {
     }
   }
 
-  /** Jaccard of two sorted distinct long arrays via two-pointer merge.
-    * Parameters are primitive `Array[Long]`, not `Seq[Long]`: Spark
-    * converts `UnsafeArrayData` to a primitive array in one copy, and
-    * positional access stays O(1) — a `Seq` parameter can arrive as a
-    * non-indexed collection and turn this loop quadratic.
+  /** Jaccard of two sorted distinct long arrays — [[PairKernel.jaccard]]
+    * at τ = 0 (no screen can reject), null-safe. Parameters are
+    * primitive `Array[Long]`, not `Seq[Long]`: Spark converts
+    * `UnsafeArrayData` to a primitive array in one copy, and positional
+    * access stays O(1) — a `Seq` parameter can arrive as a non-indexed
+    * collection and turn the merge quadratic.
     */
   val jaccardOfSortedLongs: org.apache.spark.sql.expressions.UserDefinedFunction =
     udf { (a: Array[Long], b: Array[Long]) =>
-      if (a == null || b == null || (a.isEmpty && b.isEmpty)) 0.0
-      else {
-        var i = 0; var j = 0; var inter = 0
-        while (i < a.length && j < b.length) {
-          val x = a(i); val y = b(j)
-          if (x == y) { inter += 1; i += 1; j += 1 }
-          else if (x < y) i += 1
-          else j += 1
-        }
-        val union = a.length + b.length - inter
-        if (union == 0) 0.0 else inter.toDouble / union
-      }
+      if (a == null || b == null) 0.0 else PairKernel.jaccard(a, b, 0.0) }
+
+  /** The est/verify arithmetic of every MinHash pair tail, written once:
+    * the fused bucket iterator, the candidate-local UDF and the staged
+    * join form all call it, so every path emits bit-identical
+    * (pair, jaccard) rows. */
+  private[operators] object PairKernel {
+    /** Smallest equal-component count passing `eq/width >= cutoff` — the
+      * integer form of that compare (finitely many eq values, so EXACTLY
+      * the same predicate), which lets [[estOk]] decide early. */
+    def minEq(width: Int, cutoff: Double): Int = {
+      var m = 0
+      while (m.toDouble / width < cutoff && m <= width) m += 1
+      m
     }
 
-  /** MinHash-LSH near-dup pairs, staged for scale:
-    *  1. ONE fused corpus pass → (signature, hashed shingle set),
-    *     persisted — every later stage column-prunes from this cache
-    *     instead of re-reading and re-hashing the text;
-    *  2. band the signatures, self-join buckets on ids ONLY (the narrow
-    *     shuffle — never drag shingle arrays through the bucket join);
-    *  3. dedup candidate pairs;
-    *  4. cheap prefilter: estimated Jaccard = fraction of equal
-    *     signature components (16 long comparisons/pair) — note a pair
-    *     sharing one of `bands` bands already has est ≥ rowsPerBand /
-    *     numHashes, so this only prunes when the threshold exceeds that;
-    *  5. exact hashed-shingle Jaccard only for survivors, via id-joins
-    *     back to the (broadcastable) per-doc table.
-    * On a 1000-executor cluster the bucket join shuffles ~16 bytes/row
-    * per band; shingle arrays move only for the tiny verified tail.
-    */
-  def minHashDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 5, numHashes: Int = 16, bands: Int = 4,
-      jaccardThreshold: Double = 0.6, maxBucketSize: Int = 100): DataFrame =
-    minHashPairsCore(docs, idCol, textCol, shingleLen, numHashes, bands,
-      jaccardThreshold, Left(maxBucketSize))
+    /** Signature estimate `eq/width >= cutoff` over the width prefix,
+      * with early accept (eq can only grow) and early reject (eq plus the
+      * remaining components cannot reach minEq). A null side counts as
+      * eq 0. */
+    def estOk(a: Array[Long], b: Array[Long], width: Int, minEq: Int): Boolean = {
+      if (a == null || b == null) return minEq == 0
+      val n = math.min(width, math.min(a.length, b.length))
+      var k = 0; var eq = 0
+      var pass = minEq == 0 // cutoff 0 admits every pair
+      var undecided = !pass
+      while (undecided && k < n) {
+        if (a(k) == b(k)) {
+          eq += 1
+          if (eq >= minEq) { pass = true; undecided = false }
+        } else if (eq + (n - k - 1) < minEq) undecided = false
+        k += 1
+      }
+      pass
+    }
 
-  /** [[minHashDupPairs]] with BOTH knobs derived instead of hand-set —
-    * the operating point a deployment can trust without a per-corpus
-    * sweep (the r12 cap sweep found the hand-set default silently
-    * costing 41% recall; this automates exactly that computation):
-    *
-    *  - '''(rowsPerBand, bands)''' analytically from the threshold: the
-    *    probability a true pair at similarity s=τ shares ≥1 band is
-    *    1-(1-τ^r)^b, so b(r) = ⌈ln(1-R)/ln(1-τ^r)⌉ bands reach target
-    *    recall R at the threshold (and MORE than R above it — the
-    *    S-curve is increasing). The largest r whose b(r) fits `maxBands`
-    *    wins: larger r sharpens the curve (fewer sub-threshold
-    *    candidates) at the cost of more signature components.
-    *  - '''mega-bucket cap''' from the MEASURED bucket-size histogram:
-    *    duplicate clusters and ordinary shared-phrase cohorts populate a
-    *    DENSE range of bucket sizes (every size present or nearly so),
-    *    while degenerate noise cohorts (empty text, boilerplate shared
-    *    by a large corpus fraction) sit far outside that bulk. The cap
-    *    cuts at the largest RELATIVE gap between consecutive distinct
-    *    sizes (among sizes ≥ `minOutlierBucket`, and only when that gap
-    *    exceeds `outlierGapRatio` — no qualifying gap means no outliers,
-    *    keep every bucket). Measured here: the driver corpus reads a
-    *    dense bulk then a ~2× jump to the noise cohorts at every SF
-    *    (124→242 at sf0.001, 100→215 at sf0.01, 1091→2248 at sf0.1) —
-    *    the same knee the round-12 MANUAL cap sweep found at sf0.1. The
-    *    histogram is one tiny aggregate over the banding frame (one row
-    *    per distinct size), so selection costs one model-sized pass. A
-    *    pair-cost budget was tried and rejected: bucket size alone does
-    *    not order "duplicate-rich" before "noise" (measured recall 0.55
-    *    at sf0.1 under any per-doc budget that kept the join affordable).
-    *
-    * Both derivations are deterministic functions of (τ, corpus), so a
-    * SQL oracle replays them exactly (dd_lsh_recall_report's auto row).
-    *
-    * This is the single-shape form; the engine's DEFAULT dedup path is
-    * [[minHashDupPairsBudgeted]], which walks a recall ladder and only
-    * keeps this shape when its MEASURED candidate mass fits the budget
-    * (the R=0.99-forced 2-row banding is quadratic-ish on realistic
-    * corpora — 209 s at sf1-mutated, the r14 scaling record).
-    */
-  def minHashDupPairsAuto(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 5, jaccardThreshold: Double = 0.6,
-      targetRecall: Double = 0.99, maxBands: Int = 64,
-      minOutlierBucket: Int = 16, outlierGapRatio: Double = 1.5): DataFrame = {
-    val (r, b) = lshAutoShape(jaccardThreshold, targetRecall, maxBands)
-    minHashPairsCore(docs, idCol, textCol, shingleLen, r * b, b,
-      jaccardThreshold, Right((minOutlierBucket, outlierGapRatio)))
+    /** Exact Jaccard `inter/union` of two sorted distinct long sets when
+      * it reaches `tau`, else -1. Two early rejects, both sound:
+      *  - length screen: real jac <= min/max and correctly-rounded
+      *    division is monotone, so fl(min/max) < tau implies
+      *    fl(jac) < tau;
+      *  - guarded abandon: once inter + min(remaining) sits a FULL UNIT
+      *    below the real-algebra requirement tau·(la+lb)/(1+tau), the
+      *    final compare cannot pass (fp error is ~1 ulp, the margin 1).
+      */
+    def jaccard(sa: Array[Long], sb: Array[Long], tau: Double): Double = {
+      val la = sa.length; val lb = sb.length
+      val lmax = math.max(la, lb)
+      if (lmax != 0 && math.min(la, lb).toDouble / lmax < tau) return -1.0
+      val needLow = tau * (la + lb) / (1.0 + tau) - 1.0
+      var p = 0; var q = 0; var inter = 0
+      var guard = 64
+      while (p < la && q < lb) {
+        val u = sa(p); val v = sb(q)
+        if (u == v) { inter += 1; p += 1; q += 1 }
+        else if (u < v) p += 1
+        else q += 1
+        guard -= 1
+        if (guard == 0) {
+          guard = 64
+          if ((inter + math.min(la - p, lb - q)).toDouble < needLow) return -1.0
+        }
+      }
+      val union = la + lb - inter
+      val jac = if (union == 0) 0.0 else inter.toDouble / union
+      if (jac >= tau) jac else -1.0
+    }
+
+    /** est, then verify: the pair's exact jaccard, or -1 when either
+      * rejects it. */
+    def pair(sigA: Array[Long], shA: Array[Long], sigB: Array[Long], shB: Array[Long],
+        width: Int, minEq: Int, tau: Double): Double =
+      if (estOk(sigA, sigB, width, minEq)) jaccard(shA, shB, tau) else -1.0
   }
 
-  /** [[minHashDupPairsAuto]] with a MEASURED candidate-budget check on
-    * the band shape — the missing cost dial of the derived operating
-    * point. The analytic chooser alone is recall-only: at τ=0.4 a
-    * R=0.99 target forces r=2 (r=3 needs 70 > 64 bands), and 2-row band
-    * keys are so coarse that a low-duplication corpus (heavy rewrites,
-    * realistic growth — the mutated ScaleUp corpus) carries crushing
-    * INTRINSIC candidate mass in perfectly ordinary buckets the
-    * mega-bucket cap must not cut (measured 209 s at sf1-mutated, the
-    * r14 scaling record). This operator walks `recallLadder` from the
-    * highest target down: for each shape it bands the (collapsed,
-    * already-hashed) representative signatures, derives the auto cap,
-    * and MEASURES the capped candidate mass Σ C(bucket,2) — the exact
-    * row count of the bucket self-join; the first shape whose mass fits
-    * `budgetPairsPerRep · nReps` wins, and the ladder's last entry is
-    * unconditional (at τ=0.4 that is R=0.95 → r=3 × 46 bands, whose
-    * buckets are cubically smaller). The trade is explicit and
-    * measurable: dd_lsh_recall_report carries the fallback shape's
-    * measured recall next to the primary's.
-    *
-    * Cost of the decision: the ladder shapes share ONE corpus
-    * normalization/collapse/hash pass (per-component-permutation prefix
-    * slicing, as [[minHashDupPairsMulti]]); each probe is a banding
-    * groupBy over rep-space id/hash rows plus the model-sized histogram
-    * — nothing pairwise runs until the shape is chosen. The decision is
-    * a deterministic integer compare over measured longs, so the DuckDB
-    * oracle replays shape selection, cap, mass, and verdict exactly.
+  /** Signature-estimate cutoff: slightly permissive vs the exact
+    * threshold so borderline true pairs survive to verification. */
+  private def estCutoff(tau: Double): Double = math.max(0.0, tau - 0.25)
+
+  /** Operating-point constants of every derived LSH point — the DuckDB
+    * oracle interpolates the same values:
+    *  - `MinOutlierBucket`/`OutlierGapRatio`: the gap-rule cap looks at
+    *    gaps above sizes ≥ 16 and accepts a relative knee ≥ 1.5×
+    *    ([[autoBucketCapFromHist]]);
+    *  - `MaxBands`/`TargetRecall`: the analytic shape ([[lshAutoShape]]);
+    *  - `RecallLadder`: the budgeted walk's shapes, highest recall
+    *    first — the walk accepts the FIRST shape within budget and must
+    *    not skip a cheaper, higher-recall one;
+    *  - `DefaultBudgetPairsPerRep`: the budgeted walk's default budget.
     */
-  /** Default candidate budget of [[minHashDupPairsBudgeted]], shared
-    * with the DuckDB decision replay (TextQueries inlines the same
-    * constant into the oracle SQL). */
+  private[graft] val MinOutlierBucket = 16
+  private[graft] val OutlierGapRatio = 1.5
+  private[graft] val MaxBands = 64
+  private[graft] val TargetRecall = 0.99
+  private[graft] val RecallLadder: Seq[Double] = Seq(0.99, 0.95)
   val DefaultBudgetPairsPerRep: Long = 1024L
 
-  def minHashDupPairsBudgeted(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int = 5, jaccardThreshold: Double = 0.6,
-      recallLadder: Seq[Double] = Seq(0.99, 0.95), maxBands: Int = 64,
-      minOutlierBucket: Int = 16, outlierGapRatio: Double = 1.5,
-      budgetPairsPerRep: Long = DefaultBudgetPairsPerRep): DataFrame = {
-    require(recallLadder.nonEmpty, "recallLadder must be non-empty")
-    require(recallLadder == recallLadder.sorted.reverse,
-      s"recallLadder $recallLadder must be highest-recall first — the walk " +
-      "accepts the FIRST shape within budget and must not skip a cheaper, " +
-      "higher-recall one")
-    val shapes = recallLadder.map(lshAutoShape(jaccardThreshold, _, maxBands))
-    val maxHashes = shapes.map { case (r, b) => r * b }.max
-    val rs = collapseToReps(docs, idCol, textCol, shingleLen, maxHashes)
-    val budget = budgetPairsPerRep * rs.nReps
-    // ONE (size, count) histogram per probed shape: cap, capped mass,
-    // and the tier-3 budget cap are all pure functions of it (the r15
-    // probe re-aggregated the same banded frame up to three times).
-    // The iterator is lazy, so when find() hits early the remaining
-    // shapes are never banded; when it exhausts, lastHist holds the
-    // LAST shape's histogram for the tier-3 budget cap.
-    var lastHist: Array[(Long, Long)] = Array.empty
-    val probed = shapes.iterator.map { case (r, b) =>
-      // memoized per (rep space, shape): the histogram is budget-
-      // independent, so the walk's probes are shared across every
-      // budget tier a session runs (dd_minhash_budget_mid/_floor and
-      // the shared default all walk the same shapes)
-      val hist = timed(s"probe hist r=$r b=$b")(bandHistOf(rs, r * b, b))
-      lastHist = hist
-      val cap = autoBucketCapFromHist(hist, minOutlierBucket, outlierGapRatio)
-      ((r, b), cap, cappedMassFromHist(hist, cap))
-    }.find(_._3 <= budget)
-    val out = probed match {
-      case Some(((r, b), cap, _)) =>
-        // reuse the measured cap — re-deriving it inside the pair
-        // pipeline would repeat the histogram pass for the same answer
-        pairsFromRepSpace(rs, r * b, b, jaccardThreshold, Left(cap))
-      case None =>
-        // Ladder exhausted: even the sharpest shape's histogram-derived
-        // cap exceeds the budget. Tier 3 makes the budget a HARD bound —
-        // derive the cap from the budget itself (the largest bucket size
-        // whose ascending cumulative mass still fits), so candidate mass
-        // is ≤ budgetPairsPerRep·reps BY CONSTRUCTION, i.e. linear in
-        // corpus size at any scale. Intrinsic-similarity-heavy corpora
-        // (shared-vocab synthetic text, boilerplate-dense crawls) have
-        // Σ C(bucket,2) ∝ N²·E[s^r]·bands under ANY fixed shape, so a
-        // shape alone cannot bound the join at 100 TB; the sacrifice —
-        // pairs living only in hot buckets — is uniform band-redundancy
-        // loss, and dd_lsh_recall_report measures it per corpus.
-        val (r, b) = shapes.last
-        pairsFromRepSpace(rs, r * b, b, jaccardThreshold,
-          Left(budgetCapFromHist(lastHist, budget)))
-    }
-    rs.release()
-    out
+  /** One MinHash-LSH operating point: the band shape plus the rule that
+    * picks the mega-bucket cap. Degenerate mega-buckets (a band hash
+    * shared by a large fraction of the corpus) quadratically explode the
+    * candidate join while contributing almost no true near-dups; the cap
+    * is the standard LSH skew guard at web scale. */
+  sealed trait LshPoint {
+    /** Signature components the point reads at threshold `tau`. */
+    private[operators] def width(tau: Double): Int
   }
 
+  object LshPoint {
+    /** `bands` bands over the first `numHashes` components; buckets of
+      * more than `cap` distinct texts are dropped. */
+    final case class FixedCap(numHashes: Int, bands: Int, cap: Int) extends LshPoint {
+      private[operators] def width(tau: Double): Int = numHashes
+    }
+
+    /** A fixed shape whose cap comes from the MEASURED bucket-size
+      * histogram ([[autoBucketCapFromHist]]): duplicate clusters and
+      * ordinary shared-phrase cohorts populate a DENSE range of bucket
+      * sizes, while degenerate noise cohorts (empty text, boilerplate
+      * shared by a large corpus fraction) sit far outside that bulk.
+      * Measured: the driver corpus reads a dense bulk then a ~2× jump to
+      * the noise cohorts at every SF (124→242 at sf0.001, 100→215 at
+      * sf0.01, 1091→2248 at sf0.1) — the knee the round-12 manual cap
+      * sweep found. With `lshAutoShape(τ, TargetRecall, MaxBands)` as the
+      * shape this is the analytic auto point. */
+    final case class GapCap(numHashes: Int, bands: Int) extends LshPoint {
+      private[operators] def width(tau: Double): Int = numHashes
+    }
+
+    /** The engine default: walk `RecallLadder` highest-recall first; for
+      * each analytic shape band the rep signatures, derive the gap cap,
+      * and MEASURE the capped candidate mass Σ C(bucket,2) — the exact
+      * row count of the bucket self-join. The first shape within
+      * `budgetPairsPerRep · reps` wins; when none fits, the last shape
+      * runs under a cap derived from the budget itself (the largest
+      * bucket size whose ascending cumulative mass still fits), so
+      * candidate mass is ≤ budget BY CONSTRUCTION — linear in corpus
+      * size at any scale. Why a budget: the analytic chooser alone is
+      * recall-only, and at τ=0.4 a R=0.99 target forces 2-row bands
+      * whose intrinsic candidate mass on a low-duplication corpus is
+      * crushing in perfectly ordinary buckets the gap cap must not cut
+      * (measured 209 s at sf1-mutated). Probes are model-sized
+      * histogram passes over rep-space bands; nothing pairwise runs
+      * until the shape is chosen, and the decision is an integer
+      * compare over measured longs, so the DuckDB oracle replays shape,
+      * cap, mass and verdict exactly. */
+    final case class Budgeted(budgetPairsPerRep: Long = DefaultBudgetPairsPerRep)
+        extends LshPoint {
+      private[operators] def width(tau: Double): Int = ladderShapes(tau).map(_._1).max
+    }
+  }
+
+  /** (numHashes, bands) of each `RecallLadder` shape at threshold τ. */
+  private def ladderShapes(tau: Double): Seq[(Int, Int)] =
+    RecallLadder.map { r => val (rows, b) = lshAutoShape(tau, r, MaxBands); (rows * b, b) }
+
   /** Ascending (bucket size, bucket count) histogram of a banded frame —
-    * ONE aggregation pass per probed shape; the auto cap, the capped
-    * candidate mass, and the tier-3 budget cap are all pure functions
-    * of it. Model-sized at any corpus scale: one row per DISTINCT
-    * bucket size, so the collect is bounded like the calibration
-    * histograms. */
-  private def bucketHistogram(banded0: DataFrame): Array[(Long, Long)] =
-    banded0.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__n"))
+    * ONE aggregation pass per probed shape; the gap cap, the capped
+    * candidate mass, and the budget cap are all pure functions of it.
+    * Model-sized at any corpus scale: one row per DISTINCT bucket size.
+    */
+  private def bucketHistogram(banded: DataFrame): Array[(Long, Long)] =
+    bucketSizes(banded)
       .groupBy(col("__n")).agg(count(lit(1)).as("__m"))
       .orderBy(col("__n")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -618,8 +585,13 @@ object Dedup {
     cap.toInt
   }
 
-  /** Analytic (rowsPerBand, bands) for target recall R at threshold τ —
-    * see [[minHashDupPairsAuto]]. Pure, engine-independent. */
+  /** Analytic (rowsPerBand, bands) for target recall R at threshold τ:
+    * a true pair at similarity s=τ shares ≥1 band with probability
+    * 1-(1-τ^r)^b, so b(r) = ⌈ln(1-R)/ln(1-τ^r)⌉ bands reach R at the
+    * threshold (and more above it). The largest r whose b(r) fits
+    * `maxBands` wins: larger r sharpens the S-curve (fewer sub-threshold
+    * candidates) at the cost of more signature components. Pure,
+    * engine-independent. */
   private[graft] def lshAutoShape(tau: Double, targetRecall: Double,
       maxBands: Int): (Int, Int) = {
     require(tau > 0 && tau < 1, s"threshold $tau must be in (0,1)")
@@ -633,50 +605,39 @@ object Dedup {
       .getOrElse((1, maxBands))
   }
 
-  /** Data-derived mega-bucket cap over the distinct bucket-size
-    * sequence — see [[minHashDupPairsAuto]]. Two-tier selection:
+  /** Gap-rule cap of a banded frame — see [[autoBucketCapFromHist]]. */
+  private[graft] def autoBucketCap(banded: DataFrame): Int =
+    autoBucketCapFromHist(bucketHistogram(banded))
+
+  /** Data-derived mega-bucket cap over the ascending distinct
+    * bucket-size sequence. Two-tier selection:
     *
     *  1. '''qualified knee''': the largest RELATIVE gap between
-    *     consecutive distinct sizes (among sizes ≥ `minOutlierBucket`),
-    *     accepted when it reaches `outlierGapRatio` — the bulk/noise
+    *     consecutive distinct sizes (among sizes ≥ `MinOutlierBucket`),
+    *     accepted when it reaches `OutlierGapRatio` — the bulk/noise
     *     boundary every driver SF exhibits (≥2× jumps).
     *  2. '''knee-less fallback''': when no gap qualifies (a SMOOTH
     *     histogram — the mutated-copy corpus populates a dense size
     *     range with no 1.5× jump), cut at the largest ABSOLUTE gap
-    *     (ties → larger n) instead. The r14 interim rule cut at the
-    *     relative-gap argmax unconditionally, but on a fully dense
-    *     sequence the max ratio is (n+1)/n at the SMALLEST n, which
-    *     collapsed the cap to ≈`minOutlierBucket` and silently dropped
-    *     legitimate duplicate cohorts corpus-wide; the absolute-gap
-    *     fallback keeps a real bound (the r13 keep-everything rule let
-    *     the 2-row-band join go quadratic: 367 s at sf1-mutated)
-    *     without the recall cliff. Bulk candidate mass on knee-less
-    *     corpora is governed by the budget-aware band SHAPE
-    *     ([[minHashDupPairsBudgeted]]), not by this cap.
+    *     (ties → larger n). Cutting at the relative-gap argmax
+    *     unconditionally collapses the cap to ≈`MinOutlierBucket` on a
+    *     fully dense sequence (max ratio (n+1)/n at the SMALLEST n) and
+    *     silently drops legitimate duplicate cohorts; keeping every
+    *     bucket lets the 2-row-band join go quadratic (367 s at
+    *     sf1-mutated). Bulk candidate mass on knee-less corpora is
+    *     governed by the budgeted SHAPE, not by this cap.
     *
-    * Only ordering comparisons (argmax by (ratio, n) / (gap, n)) plus
-    * one exact-double ratio-vs-literal compare, so DuckDB replays the
-    * selection bit-identically. The gap table is one row per distinct
-    * size — model-sized at any corpus scale — and is collected like the
-    * calibration histograms.
+    * Only ordering comparisons plus one exact-double ratio-vs-literal
+    * compare, so DuckDB replays the selection bit-identically.
     */
-  private[graft] def autoBucketCap(banded0: DataFrame, minOutlierBucket: Int,
-      outlierGapRatio: Double): Int =
-    autoBucketCapFromHist(bucketHistogram(banded0), minOutlierBucket,
-      outlierGapRatio)
-
-  /** The gap-rule selection itself, over the ascending size histogram —
-    * pure, so the budgeted walk derives it from the SAME single
-    * aggregation pass that feeds the mass and budget-cap checks. */
-  private[graft] def autoBucketCapFromHist(hist: Array[(Long, Long)],
-      minOutlierBucket: Int, outlierGapRatio: Double): Int = {
+  private[graft] def autoBucketCapFromHist(hist: Array[(Long, Long)]): Int = {
     val sizes = hist.map(_._1) // ascending DISTINCT bucket sizes
-    val gaps = sizes.zip(sizes.drop(1)).filter(_._1 >= minOutlierBucket)
+    val gaps = sizes.zip(sizes.drop(1)).filter(_._1 >= MinOutlierBucket)
     if (gaps.isEmpty) {
       if (sizes.isEmpty) 1 else sizes.last.toInt
     } else {
       val knee = gaps.maxBy { case (n, nx) => (nx.toDouble / n, n) }
-      if (knee._2.toDouble / knee._1 >= outlierGapRatio) knee._1.toInt
+      if (knee._2.toDouble / knee._1 >= OutlierGapRatio) knee._1.toInt
       else gaps.maxBy { case (n, nx) => (nx - n, n) }._1.toInt
     }
   }
@@ -690,171 +651,157 @@ object Dedup {
       if (t == null) null
       else t.toLowerCase.split("\\s+").filter(_.nonEmpty).mkString(" ") }
 
-  /** Shared rep-space state of the identity collapse: the rep→member
-    * map and the fused per-representative (signature, shingles) cache,
-    * both persisted, plus the rep count (already materialized by the
-    * collapse — lets consumers make broadcast decisions without a new
-    * job). `release()` after the consuming pair frames are
-    * materialized.
+  /** Input of a pair tail: a (__id, minhash_sig, __sh) table — a
+    * collapsed rep space's per-rep table or a caller's signature table —
+    * with the row count and array payload its staging decisions read.
     */
-  private case class RepSpace(members: DataFrame, perDoc: DataFrame,
-      nReps: Long, shingleBytes: Long, sigWidth: Int) {
-    /** No-op since r16: rep spaces are scratch-parquet-backed and owned
-      * by the session memo ([[repSpaceMemo]]) — the JVM-exit scratch
-      * sweep is the release point. Kept so call sites still mark where
-      * their use of the shared space ends. */
-    def release(): Unit = ()
-
-    /** Driver-built sorted-id lookup of the model-sized rep tables,
-      * built AT MOST ONCE per rep space (lazy, session-cached with the
-      * memo) and broadcast to executors. est and verify probe it from
-      * inside their UDFs, so the candidate stream stays 16 bytes/row
-      * end to end; the broadcast-JOIN form materialized two sig arrays
-      * and two shingle arrays into every candidate row (measured at
-      * sf0.1: 3.9 M capped candidates × ~2.6 KB of attached arrays ≈
-      * 10 GB of UnsafeRow writes + copies — the est+verify joins were
-      * nearly the whole 16.7 s budgeted-pipeline wall). Same memory
-      * class as the old `broadcast(sigs)` hint (the driver builds that
-      * relation anyway); the payload bounds below are unchanged, and
-      * bigger-than-bound corpora (or non-long ids) keep the join form.
-      */
+  private final case class SigTable(df: DataFrame, rows: Long, sigBytes: Long,
+      shBytes: Long) {
+    /** Driver-built sorted-id lookup of the table, built AT MOST ONCE
+      * per table (lazy; tables are session-memoized) and broadcast, so
+      * est and verify probe it from inside the tails and the candidate
+      * stream stays 16 bytes/row end to end. The join form materialized
+      * two sig arrays and two shingle arrays into every candidate row
+      * (measured at sf0.1: 3.9 M capped candidates × ~2.6 KB of attached
+      * arrays ≈ 10 GB of UnsafeRow writes). Bounds are raw PAYLOAD bytes
+      * (1 GiB sigs, 2 GiB shingles); Spark materializes a broadcast
+      * deserialized on the driver and every executor with 2-4× object
+      * overhead, so they assume ≥ ~8-16 GB heaps — size them to ~1/16 of
+      * the smallest heap when porting. Bigger tables and non-long ids
+      * get None and keep the staged join form. */
     lazy val lookup: Option[org.apache.spark.broadcast.Broadcast[RepLookup]] =
-      if (perDoc.schema("__id").dataType !=
-            org.apache.spark.sql.types.LongType ||
-          nReps * sigWidth * 8L > (1L << 30) ||
-          shingleBytes > (2L << 30)) None
+      if (df.schema("__id").dataType != org.apache.spark.sql.types.LongType ||
+          sigBytes > (1L << 30) || shBytes > (2L << 30)) None
       else {
-        val rows = timed("pairs: lookup collect")(
-          perDoc.select(col("__id"), col("minhash_sig"), col("__sh"))
-            .collect())
-        java.util.Arrays.sort(rows,
+        val rs = df.select(col("__id"), col("minhash_sig"), col("__sh")).collect()
+        java.util.Arrays.sort(rs,
           java.util.Comparator.comparingLong(
             (r: org.apache.spark.sql.Row) => r.getLong(0)))
-        val n = rows.length
-        val ids = new Array[Long](n)
-        val sg = new Array[Array[Long]](n)
-        val sh = new Array[Array[Long]](n)
-        var i = 0
-        while (i < n) {
-          val r = rows(i)
-          ids(i) = r.getLong(0)
-          sg(i) = r.getSeq[Long](1).toArray
-          sh(i) = r.getSeq[Long](2).toArray
-          i += 1
-        }
-        Some(perDoc.sparkSession.sparkContext.broadcast(
-          new RepLookup(ids, sg, sh)))
+        Some(df.sparkSession.sparkContext.broadcast(new RepLookup(
+          rs.map(_.getLong(0)), rs.map(_.getSeq[Long](1).toArray),
+          rs.map(_.getSeq[Long](2).toArray))))
       }
+
+    /** One column of the table keyed by the candidate id `idAs` — a
+      * staged join side. */
+    def side(c: org.apache.spark.sql.Column, idAs: String, as: String): DataFrame =
+      df.select(col("__id").as(idAs), c.as(as))
   }
 
-  /** Broadcast payload of [[RepSpace.lookup]]: rep ids (sorted), full-
-    * width signatures, sorted hashed-shingle sets — positional, probed
-    * by binary search. */
+  /** Broadcast payload of [[SigTable.lookup]]: ids (sorted), signatures,
+    * sorted hashed-shingle sets — positional, probed by binary search. */
   private[operators] final class RepLookup(val ids: Array[Long],
       val sigs: Array[Array[Long]], val shs: Array[Array[Long]])
       extends Serializable {
     def idx(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
   }
 
-  /** Session memo of collapsed rep spaces, keyed by the input plan —
-    * the operator-layer twin of the query-layer scratch sharing
-    * (`minhashPairsShared`): the identity collapse + fused signature
-    * pass is the fixed cost of EVERY MinHash operator over a corpus
-    * (measured ~6-7 s of each 8-9 s single-point run at sf0.1), and
-    * component k of the signature depends only on k, so ONE pass at
-    * the widest requested width serves every narrower caller by prefix
-    * slice. Widest-wins: a wider request rebuilds and replaces (the
-    * scratch path embeds the width, so a stale narrow table is never
-    * read through a replaced entry). Scratch-parquet-backed rather
-    * than persist()-pinned so a session-long cache costs disk, not
-    * executor memory — this is the single-node shape of the 100 TB
-    * discipline where the signature table is a PERSISTED corpus asset
-    * computed once per ingest, not per query. */
+  /** Shared rep-space state of the identity collapse: the rep→member map
+    * (__k, __rid, __id) and the per-rep signature table (whose df also
+    * carries the 32-byte identity key __k). */
+  private case class RepSpace(members: DataFrame, table: SigTable)
+
+  /** Session memo of collapsed rep spaces, keyed by the input plan: the
+    * identity collapse + fused signature pass is the fixed cost of EVERY
+    * MinHash operator over a corpus (measured ~6-7 s of each 8-9 s
+    * single-point run at sf0.1), and component k of the signature
+    * depends only on k, so ONE pass at the widest requested width serves
+    * every narrower caller by prefix slice. Widest-wins: a wider request
+    * rebuilds and replaces (the scratch path embeds the width, so a
+    * stale narrow table is never read through a replaced entry).
+    * Scratch-parquet-backed rather than persist()-pinned so a
+    * session-long cache costs disk, not executor memory — the
+    * single-node shape of a signature table that is a PERSISTED corpus
+    * asset computed once per ingest, not per query. */
   private val repSpaceMemo =
     scala.collection.mutable.Map[String, (Int, RepSpace)]()
 
-  /** Model-sized banding histograms, memoized per (rep space, band
-    * shape): the (bucket size, count) histogram — and the incremental
-    * path's batch-hit mass histogram below — are pure functions of
-    * these; every BUDGET or cap rule is applied to them afterwards,
-    * driver-side. So the budgeted walk's shape probes, the multi
-    * audit's auto-cap derivation, and the incremental index-side cap
-    * all share one banding aggregation per (corpus, shape) instead of
-    * re-running it per query/budget. Keys hold the memoized RepSpace
-    * instances (reference equality via the case class); bounded LRU
-    * like every model cache. */
+  /** Model-sized banding histograms, memoized per (table, band shape):
+    * every budget or cap rule is applied to them afterwards,
+    * driver-side, so the budgeted walk's probes, the gap-cap points and
+    * the incremental index-side cap share one banding aggregation per
+    * (corpus, shape) instead of re-running it per query/budget. */
   private val bandHistMemo =
-    new graft.core.BoundedMemo[(RepSpace, Int, Int), Array[(Long, Long)]](16)
-  private def bandHistOf(rs: RepSpace, numHashes: Int, bands: Int)
+    new graft.core.BoundedMemo[(SigTable, Int, Int), Array[(Long, Long)]](16)
+  private def bandHistOf(t: SigTable, numHashes: Int, bands: Int)
       : Array[(Long, Long)] =
-    bandHistMemo.getOrElseUpdate((rs, numHashes, bands),
-      bucketHistogram(bandsOfSigs(rs.perDoc.select(col("__id"),
-        slice(col("minhash_sig"), 1, numHashes).as("minhash_sig")),
-        numHashes, bands)))
+    bandHistMemo.getOrElseUpdate((t, numHashes, bands),
+      bucketHistogram(bandsOf(t.df, numHashes, bands)))
   private val massHistMemo =
-    new graft.core.BoundedMemo[(RepSpace, RepSpace, Int, Int, Int),
+    new graft.core.BoundedMemo[(SigTable, SigTable, Int, Int, Int),
       Array[(Long, Long)]](16)
 
-  /** Count of equal positions of two equal-length long arrays — the
-    * signature-estimate kernel, fused (zip_with/filter/size run
-    * interpreted per element; at tens of millions of candidates the
-    * Column form dominated the whole pair join). */
-  private val sigEqCount: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: Array[Long], b: Array[Long]) =>
-      // null-safe like the zip_with/filter/size Column form it replaced:
-      // est 0 never passes the cutoff, matching the old null→filtered
-      // semantics (all current call sites inner-join non-null sig
-      // tables, but a nullable minhash_sig column must not NPE)
-      if (a == null || b == null) 0
-      else {
-        var i = 0
-        var eq = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
-        eq
-      }
-    }
-
-  private def minHashPairsCore(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int, numHashes: Int, bands: Int,
-      jaccardThreshold: Double, capSpec: Either[Int, (Int, Double)]): DataFrame = {
-    val rs = collapseToReps(docs, idCol, textCol, shingleLen, numHashes)
-    val out = pairsFromRepSpace(rs, numHashes, bands, jaccardThreshold, capSpec)
-    rs.release()
-    out
+  /** Signature tables of caller-owned sig frames, memoized per input
+    * plan: within-corpus + cross-index calls over the same batch frame
+    * (the e2e drop shape) otherwise re-ran the stats aggregate and the
+    * lookup collect per call. planKey folds file mtimes, so a rewritten
+    * scratch table mints a fresh entry. */
+  private val sigTableMemo = new graft.core.BoundedMemo[String, SigTable](32)
+  private def sigTableOf(sigs: DataFrame, idCol: String): SigTable = {
+    val df = sigs.select(col(idCol).as("__id"), col("minhash_sig"),
+      col("shingles").as("__sh"))
+    sigTableMemo.getOrElseUpdate(graft.core.Scratch.planKey(df), {
+      val st = df.agg(count(lit(1)), sum(size(col("minhash_sig"))),
+        sum(size(col("__sh")))).head()
+      def bytes(i: Int) = if (st.isNullAt(i)) 0L else st.getLong(i) * 8L
+      SigTable(df, st.getLong(0), bytes(1), bytes(2))
+    })
   }
 
-  /** Several LSH operating points over ONE shared identity collapse and
-    * ONE fused signature pass: component k of the signature depends only
-    * on k (an independent permutation `(a_k·h1 + b_k) mod (2⁶¹−1)` —
-    * see [[minHashSignature]]), so every shorter signature is a PREFIX
-    * of the widest one and the corpus is normalized, collapsed, shingled and hashed
-    * exactly once at `max(numHashes)` and each setting merely slices
-    * its prefix before banding. This is what makes a multi-setting
-    * audit (dd_lsh_recall_report) cost one corpus pass plus per-setting
-    * banding joins instead of one full pipeline per setting. Returned
-    * pair frames are persisted and materialized (same contract as
-    * [[minHashDupPairs]]).
-    *
-    * @param settings (label, numHashes, bands, capSpec) per operating
-    *                 point; capSpec as in [[minHashPairsCore]].
+  /** MinHash-LSH near-dup pairs at one or more operating points over ONE
+    * shared identity collapse and ONE fused signature pass: component k
+    * of the signature depends only on k (see [[minHashSignature]]), so
+    * every narrower signature is a PREFIX of the widest one and the
+    * corpus is normalized, collapsed, shingled and hashed exactly once
+    * at the widest point's width; each point slices its prefix, bands
+    * it, caps mega-buckets, estimate-prefilters and verifies with exact
+    * hashed-shingle Jaccard ([[withinPairs]]), then fans verified rep
+    * pairs out to member pairs. A multi-point audit
+    * (dd_lsh_recall_report) thereby costs one corpus pass plus
+    * per-point banding. Returns label → (id_a < id_b, jaccard), each
+    * frame persisted and materialized.
     */
-  def minHashDupPairsMulti(docs: DataFrame, idCol: String, textCol: String,
+  def minHashDupPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleLen: Int, jaccardThreshold: Double,
-      settings: Seq[(String, Int, Int, Either[Int, (Int, Double)])])
-      : Map[String, DataFrame] = {
-    require(settings.nonEmpty, "at least one LSH setting")
-    require(settings.map(_._1).distinct.size == settings.size,
-      s"duplicate setting labels in ${settings.map(_._1)} — .toMap would " +
+      points: Seq[(String, LshPoint)]): Map[String, DataFrame] =
+    dupPairs(docs, idCol, textCol, shingleLen, jaccardThreshold, points,
+      lookups = true)
+
+  /** [[minHashDupPairs]]; `lookups = false` forces the staged join tail
+    * (the differential specs pin the two tails against each other). */
+  private[graft] def dupPairs(docs: DataFrame, idCol: String, textCol: String,
+      shingleLen: Int, jaccardThreshold: Double, points: Seq[(String, LshPoint)],
+      lookups: Boolean): Map[String, DataFrame] = {
+    require(points.nonEmpty, "at least one LSH operating point")
+    require(points.map(_._1).distinct.size == points.size,
+      s"duplicate point labels in ${points.map(_._1)} — .toMap would " +
       "silently keep only the last pipeline per label while every earlier " +
       "one stays persisted for the session's life")
-    val maxHashes = settings.map(_._2).max
-    val rs = collapseToReps(docs, idCol, textCol, shingleLen, maxHashes)
-    val out = settings.map { case (label, nh, b, cap) =>
-      label -> pairsFromRepSpace(rs, nh, b, jaccardThreshold, cap)
+    val rs = collapseToReps(docs, idCol, textCol, shingleLen,
+      points.map(_._2.width(jaccardThreshold)).max)
+    points.map { case (label, p) =>
+      val (nh, b, cap) = resolvePoint(rs.table, jaccardThreshold, p)
+      label -> pairsFromRepSpace(rs, nh, b, jaccardThreshold, cap, lookups)
     }.toMap
-    rs.release()
-    out
+  }
+
+  /** (numHashes, bands, cap) of an operating point over a rep table. */
+  private def resolvePoint(t: SigTable, tau: Double, point: LshPoint)
+      : (Int, Int, Int) = point match {
+    case LshPoint.FixedCap(nh, b, cap) => (nh, b, cap)
+    case LshPoint.GapCap(nh, b) => (nh, b, autoBucketCapFromHist(bandHistOf(t, nh, b)))
+    case LshPoint.Budgeted(perRep) =>
+      val shapes = ladderShapes(tau)
+      val budget = perRep * t.rows
+      // lazy: once a shape fits, the later shapes are never banded
+      shapes.iterator.map { case (nh, b) =>
+        val cap = autoBucketCapFromHist(bandHistOf(t, nh, b))
+        (nh, b, cap, cappedMassFromHist(bandHistOf(t, nh, b), cap))
+      }.collectFirst { case (nh, b, cap, mass) if mass <= budget => (nh, b, cap) }
+        .getOrElse {
+          val (nh, b) = shapes.last
+          (nh, b, budgetCapFromHist(bandHistOf(t, nh, b), budget))
+        }
   }
 
   private def collapseToReps(docs: DataFrame, idCol: String, textCol: String,
@@ -909,316 +856,49 @@ object Dedup {
     // re-read); the banding, estimate, and verify branches all reuse
     // perDoc — uncached, the fused UDF would re-run once per DAG branch.
     // __k (the 32-byte identity key) rides along in both tables: the
-    // asymmetric ingest path ([[minHashAgainstIndexCore]]) matches
+    // asymmetric ingest path ([[minHashDupAgainstIndexAuto]]) matches
     // identical texts ACROSS the batch/index boundary on it; the
     // within-corpus consumers simply never select it.
-    val members = timed("collapse: members write")(graft.core.Scratch.materialize(
+    val members = graft.core.Scratch.materialize(
       withNorm.select(col("__k"), col("__id"))
         .join(reps.select(col("__k"), col("__rid")), Seq("__k"))
         .select(col("__k"), col("__rid"), col("__id")),
-      "mh_members", memoKey))
-    val perDoc = timed("collapse: perDoc write")(graft.core.Scratch.materialize(
+      "mh_members", memoKey)
+    val perDoc = graft.core.Scratch.materialize(
       reps
         .select(col("__rid").as("__id"), col("__k"),
           sigAndHashedShingles(shingleLen, numHashes)(col("__norm")).as("__c"))
         .select(col("__id"), col("__k"),
           col("__c._1").as("minhash_sig"), col("__c._2").as("__sh")),
-      "mh_perdoc", s"$memoKey|$numHashes"))
+      "mh_perdoc", s"$memoKey|$numHashes")
     // One aggregate over the written table measures the shingle payload
     // (long count × 8) so downstream join-vs-broadcast staging decisions
     // cost no extra job.
-    val stats = timed("collapse: stats agg")(
-      perDoc.agg(count(lit(1)), sum(size(col("__sh")))).head())
+    val stats = perDoc.agg(count(lit(1)), sum(size(col("__sh")))).head()
     val nReps = stats.getLong(0)
     val shingleBytes = (if (stats.isNullAt(1)) 0L else stats.getLong(1)) * 8L
     reps.unpersist()
     withNorm.unpersist()
-    val rs = RepSpace(members, perDoc, nReps, shingleBytes, numHashes)
+    val rs = RepSpace(members,
+      SigTable(perDoc, nReps, nReps * numHashes * 8L, shingleBytes))
     repSpaceMemo(memoKey) = (numHashes, rs)
     rs
   }
 
   /** One LSH operating point over an already-collapsed [[RepSpace]]:
-    * band the signature PREFIX of width `numHashes`, cap mega-buckets,
-    * estimate-prefilter, verify with exact hashed-shingle Jaccard, and
-    * fan the verified rep pairs back out to member pairs. Returns a
-    * persisted, materialized pair frame; does NOT release the shared
-    * rep-space caches (the caller owns them — see
-    * [[minHashDupPairsMulti]]).
+    * the within tail over the rep table, then the fan-out of verified
+    * rep pairs to member pairs. Returns a persisted, materialized pair
+    * frame (the shared rep-space caches stay with the session memo).
     */
   private def pairsFromRepSpace(rs: RepSpace, numHashes: Int, bands: Int,
-      jaccardThreshold: Double, capSpec: Either[Int, (Int, Double)]): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands=$bands must divide numHashes=$numHashes — a remainder would " +
-      "silently drop trailing signature components and lower recall")
+      jaccardThreshold: Double, cap: Int, lookups: Boolean): DataFrame = {
     require(jaccardThreshold > 0,
       "threshold must be positive — the identity collapse emits " +
       "same-text pairs at jaccard 1.0 and null-text docs never pair, " +
       "which matches the uncollapsed semantics only for τ > 0")
-    val rowsPerBand = numHashes / bands
     val members = rs.members
-    // Prefix slice: component k is min over shingles of the k-th
-    // independent permutation regardless of the total width, so a
-    // narrower setting's signature is exactly the wider cache's prefix.
-    val sigs = rs.perDoc.select(col("__id"),
-      slice(col("minhash_sig"), 1, numHashes).as("minhash_sig"))
-    val banded0 = sigs.select(col("__id"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(slice(col("minhash_sig"), b * rowsPerBand + 1, rowsPerBand)
-          .cast("array<string>").cast("string"))
-      }: _*)).as(Seq("band", "band_hash")))
-    // Degenerate mega-buckets (a band hash shared by a large fraction of
-    // the corpus) are noise, not signal: they quadratically explode the
-    // candidate join while contributing almost no true near-dups. Cap
-    // them — the standard LSH skew guard at web scale. The cap is either
-    // caller-fixed or derived from the measured histogram (auto path).
-    val maxBucketSize = capSpec match {
-      case Left(fixed) => fixed
-      case Right((minOutlier, gapRatio)) =>
-        // derive from the memoized per-shape histogram (identical to
-        // autoBucketCap(banded0, ...): banded0 IS this shape's banding)
-        timed(s"pairs: autoBucketCap nh=$numHashes")(
-          autoBucketCapFromHist(bandHistOf(rs, numHashes, bands),
-            minOutlier, gapRatio))
-    }
-    val bucketSizes = banded0.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= maxBucketSize)
-      .drop("__n")
-    val banded = banded0.join(bucketSizes, Seq("band", "band_hash"), "left_semi")
-    val candRaw = banded.select(col("band"), col("band_hash"), col("__id").as("id_a"))
-      .join(banded.select(col("band"), col("band_hash"), col("__id").as("id_b")),
-        Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // signature-estimate prefilter (slightly permissive vs the exact
-    // threshold so borderline true pairs survive to verification).
-    // The rep sig table is model-sized on any collapsed corpus; when it
-    // fits a 1 GB broadcast budget (well under Spark's 8 GB broadcast
-    // cap — ~1 M reps at 138 components), ship it to the candidates AND
-    // run the estimate as a MAP-ONLY filter over the raw (still
-    // band-duplicated) candidate stream, deduplicating only the
-    // survivors: the alternative — dedup first, then est via joins —
-    // sorts the FULL candidate mass (a 476 M-row sort at sf10-mutated
-    // filled a 75 GB disk) and/or drags one 8·numHashes-byte array per
-    // candidate through a shuffle (~77 GB at sf1-mutated). est is a
-    // pure function of the pair, so filtering band-duplicates before
-    // dedup returns the identical pair set. Past the broadcast bound
-    // (DISTINCT texts in the many millions) the dedup-first shuffle
-    // join remains — at that scale a deployment shards the candidate
-    // join by rep-id range so each block's sig slice broadcasts.
-    // NOTE both bounds here and below are raw PAYLOAD bytes; Spark
-    // materializes a broadcast deserialized on the driver and every
-    // executor with 2-4x object overhead, so the 1 GB / 2 GB constants
-    // assume ≥ ~8-16 GB driver/executor heaps (this rig runs 128 GB;
-    // a default 1 GB driver would OOM near the bound — size the
-    // constants to ~1/16 of the smallest heap when porting).
-    val estCutoff = math.max(0.0, jaccardThreshold - 0.25)
-    val sigsSmall = rs.nReps * numHashes * 8L <= (1L << 30)
-    def sigSide(idAs: String, sigAs: String) = {
-      val s = sigs.select(col("__id").as(idAs), col("minhash_sig").as(sigAs))
-      if (sigsSmall) broadcast(s) else s
-    }
-    def estFilter(pairs: DataFrame): DataFrame = pairs
-      .join(sigSide("id_a", "sig_a"), Seq("id_a"))
-      .join(sigSide("id_b", "sig_b"), Seq("id_b"))
-      .withColumn("est",
-        sigEqCount(col("sig_a"), col("sig_b")).cast("double") / numHashes)
-      .filter(col("est") >= estCutoff)
-      .select("id_a", "id_b")
-    // Fused bucket-local candidate+est+verify (r17): when the rep
-    // tables fit the documented broadcast bounds, the per-bucket pair
-    // ENUMERATION, the signature-estimate prefilter and the exact
-    // shingle verify all run in ONE tight loop per uncapped bucket,
-    // probing the shared [[RepSpace.lookup]]. The r16 shape — bucket
-    // self-join → per-candidate est UDF → dropDuplicates → per-pair
-    // verify UDF — materialized every capped candidate as a row and
-    // shuffled every est survivor: measured at sf1-mutated, the
-    // R=0.99 audit point (54×27, cap 7608) enumerates 242 M candidate
-    // rows of which est passes 124 M (51% — the prefilter barely
-    // prunes at cutoff τ−0.25) while only 16 807 pairs verify; the est
-    // UDF invocations, the 124 M-row distinct shuffle, and the 124 M
-    // broadcast-probe verify calls were 52 s of wall for a 17 k-row
-    // answer. Here the candidate stream never becomes rows: buckets
-    // (≤ cap ids each, sorted) flatMap through an iterator that runs
-    // the IDENTICAL est compare (same eq-count loop over the width
-    // prefix, same eq/width ≥ cutoff double compare) and the IDENTICAL
-    // two-pointer jaccard ([[jaccardOfSortedLongs]] arithmetic), so
-    // only verified pairs materialize; duplicates across bands (est
-    // and jaccard are pure functions of the pair, so every bucket
-    // emits the same verdict) collapse in a distinct over the VERIFIED
-    // set instead of the candidate set. Pair set and every jaccard
-    // value are bit-identical to the join form; the shuffle cost drops
-    // from O(capped candidates) to O(reps · bands + verified pairs).
-    // `graft.mh.fusedTail=off` (test seam) forces the classic tail for
-    // differential pinning.
-    val repPairs = (rs.lookup match {
-      case Some(bl) if sys.props.get("graft.mh.fusedTail")
-          .orElse(sys.env.get("SPARK_GRAFT_MH_FUSED_TAIL"))
-          .getOrElse("on") != "off" =>
-        val width = numHashes
-        val cutoff = estCutoff
-        val tau = jaccardThreshold
-        // The mega-bucket cap rides the same aggregation: bucket size
-        // IS the collected list's size, so the count-groupBy +
-        // semi-join of the classic shape (bucketSizes/banded) folds
-        // into one exchange. Each surviving bucket is then SPLIT into
-        // chunks of ≲2¹⁷ pairs (outer index i strided by chunk count —
-        // a disjoint exact partition of the i<j pair space) and the
-        // chunks round-robin-repartitioned to the session parallelism:
-        // bucket rows are a few KB while their pair loops are C(n,2)
-        // CPU, so AQE's byte-based coalescing otherwise folds the whole
-        // corpus' pair work onto 1-2 post-shuffle partitions (measured
-        // at sf0.1: 23.5 s → 12.8 s for one operating point just by
-        // keeping the exchange wide), and a capped mega-bucket
-        // (C(7608,2) ≈ 29 M pairs) otherwise lands on ONE core.
-        // repartition with an explicit partition count is exempt from
-        // AQE coalescing, and defaultParallelism keeps it
-        // scale-adaptive rather than tuned to this rig.
-        val chunkPairs = 1L << 17
-        val sz = size(col("__ids")).cast("long")
-        val buckets = banded0
-          .groupBy(col("band"), col("band_hash"))
-          .agg(collect_list(col("__id")).as("__ids"))
-          .filter(size(col("__ids")) >= 2 &&
-            size(col("__ids")) <= maxBucketSize)
-          .select(col("__ids"),
-            greatest(lit(1L),
-              (sz * (sz - 1L) / 2L + (chunkPairs - 1L)) / chunkPairs)
-              .cast("int").as("__nc"))
-          .select(col("__ids"), col("__nc"),
-            explode(sequence(lit(0), col("__nc") - 1)).as("__c"))
-          .toDF("_1", "_2", "_3")
-        val sess = buckets.sparkSession
-        import sess.implicits._
-        buckets
-          .repartition(sess.sparkContext.defaultParallelism)
-          .as[(Array[Long], Int, Int)]
-          .flatMap { case (raw, nc, c) =>
-            val l = bl.value
-            val ids = raw.clone()
-            java.util.Arrays.sort(ids)
-            val m = ids.length
-            // Hoist the broadcast lookups once per chunk: the inner
-            // loop would otherwise re-run an O(log reps) binary search
-            // (16 cache-missing probes at sf1m) per CANDIDATE.
-            val asig = new Array[Array[Long]](m)
-            val ash = new Array[Array[Long]](m)
-            var t = 0
-            while (t < m) {
-              val x = l.idx(ids(t))
-              if (x >= 0) { asig(t) = l.sigs(x); ash(t) = l.shs(x) }
-              t += 1
-            }
-            // Smallest eq count passing the est compare — the integer
-            // form of `eq/width >= cutoff` (finitely many eq values, so
-            // this is EXACTLY the same predicate, enabling early
-            // accept/reject inside the eq loop).
-            var minEq = 0
-            while (minEq.toDouble / width < cutoff && minEq <= width) minEq += 1
-            new scala.collection.AbstractIterator[(Long, Long, Double)] {
-              private var i = c - nc // advance() starts each row at i + nc
-              private var j = m // forces the first advance to move i
-              private var nxt: (Long, Long, Double) = _
-              private var has = false
-              advance()
-              private def advance(): Unit = {
-                has = false
-                while (!has && i < m - 1) {
-                  j += 1
-                  if (j >= m) { i += nc; j = i + 1 }
-                  if (i < m - 1 && j < m && (asig(i) ne null)) {
-                    val b = asig(j)
-                    if (b ne null) {
-                      // est: the same eq/width >= cutoff predicate as
-                      // the classic estOk probe, decided via minEq with
-                      // early accept (eq can only grow) and early
-                      // reject (eq + remaining < minEq can't recover)
-                      val a = asig(i)
-                      var k = 0; var eq = 0
-                      val n = math.min(width, math.min(a.length, b.length))
-                      var pass = minEq == 0 // cutoff 0 admits every pair
-                      var undecided = !pass
-                      while (undecided && k < n) {
-                        if (a(k) == b(k)) {
-                          eq += 1
-                          if (eq >= minEq) { pass = true; undecided = false }
-                        } else if (eq + (n - k - 1) < minEq) undecided = false
-                        k += 1
-                      }
-                      // (a loop that runs out leaves eq < minEq: reject
-                      // — same as eq/width < cutoff in the classic form)
-                      if (pass) {
-                        val sa = ash(i); val sb = ash(j)
-                        val la = sa.length; val lb = sb.length
-                        // length screen: real jac <= min/max and
-                        // correctly-rounded division is monotone, so
-                        // fl(min/max) < tau implies fl(jac) < tau —
-                        // the pair cannot pass the final compare.
-                        val lmin = math.min(la, lb); val lmax = math.max(la, lb)
-                        if (lmax == 0 || lmin.toDouble / lmax >= tau) {
-                          // verify: same arithmetic as
-                          // [[jaccardOfSortedLongs]], with a guarded
-                          // abandon: once inter + min(remaining) sits a
-                          // FULL UNIT below the real-algebra requirement
-                          // tau*(la+lb)/(1+tau), the final fl compare
-                          // cannot pass (fp error is ~1 ulp, the margin
-                          // is 1), so the merge stops scanning.
-                          val needLow = tau * (la + lb) / (1.0 + tau) - 1.0
-                          var p = 0; var q = 0; var inter = 0
-                          var live = true
-                          var guard = 64
-                          while (live && p < la && q < lb) {
-                            val u = sa(p); val v = sb(q)
-                            if (u == v) { inter += 1; p += 1; q += 1 }
-                            else if (u < v) p += 1
-                            else q += 1
-                            guard -= 1
-                            if (guard == 0) {
-                              guard = 64
-                              if ((inter + math.min(la - p, lb - q)).toDouble
-                                  < needLow) live = false
-                            }
-                          }
-                          if (live) {
-                            val union = la + lb - inter
-                            val jac =
-                              if (union == 0) 0.0 else inter.toDouble / union
-                            if (jac >= tau) {
-                              nxt = (ids(i), ids(j), jac); has = true
-                            }
-                          }
-                        }
-                      }
-                    }
-                  }
-                }
-              }
-              def hasNext: Boolean = has
-              def next(): (Long, Long, Double) = { val r = nxt; advance(); r }
-            }
-          }.toDF("id_a", "id_b", "jaccard")
-          .dropDuplicates("id_a", "id_b")
-      case _ =>
-        // Classic staged tail (kept verbatim as the over-bound
-        // fallback): est via sig joins or broadcast-lookup-free
-        // staging, distinct over est survivors, then the shingle-array
-        // verify join.
-        val withSigs =
-          if (sigsSmall) estFilter(candRaw).dropDuplicates("id_a", "id_b")
-          else estFilter(candRaw.dropDuplicates("id_a", "id_b"))
-        val shingles = rs.perDoc.select(col("__id"), col("__sh"))
-        def shSide(idAs: String, shAs: String) = {
-          val s = shingles.select(col("__id").as(idAs), col("__sh").as(shAs))
-          if (rs.shingleBytes <= (2L << 30)) broadcast(s) else s
-        }
-        withSigs
-          .join(shSide("id_a", "sh_a"), Seq("id_a"))
-          .join(shSide("id_b", "sh_b"), Seq("id_b"))
-          .withColumn("jaccard", jaccardOfSortedLongs(col("sh_a"), col("sh_b")))
-    })
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select("id_a", "id_b", "jaccard")
+    val repPairs = withinPairs(rs.table, if (lookups) rs.table.lookup else None,
+      numHashes, bands, jaccardThreshold, cap)
     // Emission fan-out of the identity collapse: cross-rep member pairs
     // inherit their representatives' exact jaccard (identical texts are
     // interchangeable), same-rep member pairs are jaccard-1.0 by
@@ -1235,120 +915,21 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
     // The verified pair set is tiny next to the per-doc cache; pin and
-    // materialize it before the caller releases the rep-space caches —
-    // otherwise the lazy pair DAG would recompute the whole collapse.
+    // materialize it so the lazy pair DAG never recomputes the collapse.
     val out = crossPairs.unionByName(samePairs).persist()
-    timed(s"pairs: full pipeline nh=$numHashes b=$bands cap=$maxBucketSize")(
-      out.count())
+    out.count()
     out
   }
 
-  /** Incremental MinHash dedup of a NEW batch against an EXISTING
-    * corpus index — the continuous-ingest shape: the index side's
-    * banded signatures are precomputed once (at scale, a persisted
-    * table partitioned by (band, band_hash)), and each arriving batch
-    * joins its own bands against the index only. Asymmetric by design:
-    * no within-batch and no within-index pairs — those are [[
-    * minHashDupPairs]]'s job at bootstrap; this is the steady-state
-    * operator that keeps a trillion-token corpus deduplicated without
-    * re-pairing it. Mirrors the reference's incremental ingestion
-    * discipline (watermark loads, `tasks/tushare/tushare_stock_daily/
-    * stock.py:124-150`) applied to near-dup state.
-    *
-    * The mega-bucket cap applies to INDEX-side buckets (the index is
-    * the big side); batch buckets are batch-sized by construction.
-    * Returns (new_id, index_id, jaccard) for verified matches.
-    */
-  def minHashDupAgainstIndex(index: DataFrame, batch: DataFrame,
-      idCol: String, textCol: String,
-      shingleLen: Int = 5, numHashes: Int = 16, bands: Int = 4,
-      jaccardThreshold: Double = 0.6, maxBucketSize: Int = 100): DataFrame =
-    minHashAgainstIndexCore(index, batch, idCol, textCol, shingleLen,
-      numHashes, bands, jaccardThreshold, Left(maxBucketSize))
-
-  /** One fused (signature, hashed-shingle-set) pass over a batch — the
-    * columns an incremental dedup index PERSISTS so steady-state ingest
-    * never re-hashes previously indexed text (the "at scale, a
-    * persisted table" shape [[minHashDupAgainstIndex]]'s scaladoc
-    * promises; e2e_corpus_curation stores these next to the curated
-    * rows and re-reads them as the index side of every later drop).
-    * Returns (idCol, minhash_sig, shingles).
-    */
-  def minHashSigTable(docs: DataFrame, idCol: String, textCol: String,
-      shingleLen: Int, numHashes: Int): DataFrame =
-    graft.core.Tables.scatter(docs)
-      .select(col(idCol),
-        sigAndHashedShingles(shingleLen, numHashes)(col(textCol)).as("__c"))
-      .select(col(idCol), col("__c._1").as("minhash_sig"), col("__c._2").as("shingles"))
-
-  /** Verified near-dup pairs WITHIN one precomputed signature table —
-    * banding, optional mega-bucket cap, signature-estimate prefilter,
-    * exact hashed-shingle verify; (id_a < id_b, jaccard). The sig/
-    * shingle columns are [[minHashSigTable]]'s. No identity collapse:
-    * callers on duplicate-heavy corpora want [[minHashDupPairs]]; this
-    * is the primitive for pipelines that already own a signature store.
-    */
-  def minHashPairsWithinSigs(sigs: DataFrame, idCol: String,
-      numHashes: Int, bands: Int, jaccardThreshold: Double,
-      maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val banded0 = bandsOfSigs(sigs.select(col(idCol).as("__id"),
-      col("minhash_sig")), numHashes, bands)
-    val banded = cappedBands(banded0, maxBucketSize)
-    val cand = banded.select(col("band"), col("band_hash"), col("__id").as("id_a"))
-      .join(banded.select(col("band"), col("band_hash"), col("__id").as("id_b")),
-        Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    val sigTable = sigs.select(col(idCol).as("__id"), col("minhash_sig"), col("shingles"))
-    verifySigCandidates(cand, "id_a", "id_b", sigTable, sigTable,
-      numHashes, jaccardThreshold)
-  }
-
-  /** Verified near-dup pairs BETWEEN a batch signature table and a
-    * (typically persisted) index signature table — the steady-state
-    * ingest join with zero re-hashing of index text. The candidate
-    * keeps its (batch id, index id) orientation through estimation and
-    * verification — each side joins ONLY its own signature table, so an
-    * id that appears in both tables cannot fan the verify joins out or
-    * cross-match rows (it yields the well-defined batch-row × index-row
-    * pair instead; self pairs with equal ids are dropped). Returns
-    * (id_a, id_b, jaccard) with id_a < id_b, ONE row per unordered
-    * pair: when ids overlap between the tables a pair can band together
-    * in BOTH orientations (batch x vs index y AND batch y vs index x),
-    * and the two verifies may even compute different jaccards if the
-    * same id carries different text per table — the final aggregate
-    * keeps the MAX jaccard across orientations (deterministic, and the
-    * identity when the orientations agree). Cap applies to index-side
-    * buckets, as in [[minHashDupAgainstIndex]].
-    */
-  def minHashPairsBetweenSigs(batchSigs: DataFrame, indexSigs: DataFrame,
-      idCol: String, numHashes: Int, bands: Int, jaccardThreshold: Double,
-      maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val idxBanded = cappedBands(bandsOfSigs(
-      indexSigs.select(col(idCol).as("__id"), col("minhash_sig")),
-      numHashes, bands), maxBucketSize)
-    val batchBanded = bandsOfSigs(batchSigs.select(col(idCol).as("__id"),
-      col("minhash_sig")), numHashes, bands)
-    val cand = batchBanded.select(col("band"), col("band_hash"), col("__id").as("__bid"))
-      .join(idxBanded.select(col("band"), col("band_hash"), col("__id").as("__iid")),
-        Seq("band", "band_hash"))
-      .filter(col("__bid") =!= col("__iid"))
-      .select("__bid", "__iid")
-      .dropDuplicates("__bid", "__iid")
-    verifySigCandidates(cand, "__bid", "__iid",
-        batchSigs.select(col(idCol).as("__id"), col("minhash_sig"), col("shingles")),
-        indexSigs.select(col(idCol).as("__id"), col("minhash_sig"), col("shingles")),
-        numHashes, jaccardThreshold)
-      .select(least(col("__bid"), col("__iid")).as("id_a"),
-        greatest(col("__bid"), col("__iid")).as("id_b"), col("jaccard"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("jaccard")).as("jaccard"))
-  }
-
-  private def bandsOfSigs(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+  /** The one banding function: `bands` xxhash64 band keys over the first
+    * `numHashes` components of `minhash_sig` (a wider signature is read
+    * by prefix — component k depends only on k) → (__id, band,
+    * band_hash). Never drags shingle arrays: the bucket joins shuffle
+    * ~16 bytes/row per band. */
+  private def bandsOf(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0,
-      s"bands=$bands must divide numHashes=$numHashes")
+      s"bands=$bands must divide numHashes=$numHashes — a remainder would " +
+      "silently drop trailing signature components and lower recall")
     val rowsPerBand = numHashes / bands
     sigs.select(col("__id"),
       posexplode(array((0 until bands).map { b =>
@@ -1357,380 +938,371 @@ object Dedup {
       }: _*)).as(Seq("band", "band_hash")))
   }
 
-  /** Mega-bucket cap over a banded frame; Int.MaxValue skips the
-    * histogram pass entirely (capless mode pays no extra shuffle). */
-  private def cappedBands(banded0: DataFrame, maxBucketSize: Int): DataFrame =
-    if (maxBucketSize == Int.MaxValue) banded0
-    else {
-      val ok = banded0.groupBy(col("band"), col("band_hash"))
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBucketSize)
-        .drop("__n")
-      banded0.join(ok, Seq("band", "band_hash"), "left_semi")
-    }
+  /** Rows per (band, band_hash) bucket of a banded frame → __n. */
+  private def bucketSizes(banded: DataFrame): DataFrame =
+    banded.groupBy(col("band"), col("band_hash")).agg(count(lit(1)).as("__n"))
 
-  /** Optional driver-built lookup over an (__id, minhash_sig, shingles)
-    * signature table — the [[RepSpace.lookup]] discipline for callers
-    * that own a sig table instead of a rep space. Bounds and payload
-    * are identical (1 GiB sigs / 2 GiB shingles, long ids); one
-    * column-pruned stats aggregate decides, so the corpus-sized regime
-    * pays one cheap pass and keeps the join staging. */
-  /** Memoized per input plan (r16): within-corpus + cross-index calls
-    * over the same batch frame (the e2e drop shape — within pairs, then
-    * batch×index pairs) otherwise re-ran the stats aggregate and the
-    * collect per call. planKey folds file mtimes, so a rewritten
-    * scratch table mints a fresh entry. */
-  private val sigLookupMemo = new graft.core.BoundedMemo[String,
-    Option[org.apache.spark.broadcast.Broadcast[RepLookup]]](32)
-  private def sigTableLookup(sigs: DataFrame)
-      : Option[org.apache.spark.broadcast.Broadcast[RepLookup]] =
-    sigLookupMemo.getOrElseUpdate(graft.core.Scratch.planKey(sigs),
-      sigTableLookupBuild(sigs))
+  /** The capped-bucket primitive: the banded rows whose bucket holds at
+    * most `cap` rows; Int.MaxValue skips the aggregation entirely
+    * (capless mode pays no extra shuffle). */
+  private def capped(banded: DataFrame, cap: Int): DataFrame =
+    if (cap == Int.MaxValue) banded
+    else banded.join(bucketSizes(banded).filter(col("__n") <= cap).drop("__n"),
+      Seq("band", "band_hash"), "left_semi")
 
-  private def sigTableLookupBuild(sigs: DataFrame)
-      : Option[org.apache.spark.broadcast.Broadcast[RepLookup]] = {
-    if (sigs.schema("__id").dataType !=
-        org.apache.spark.sql.types.LongType) return None
-    val st = sigs.agg(count(lit(1)),
-      sum(size(col("minhash_sig"))), sum(size(col("shingles")))).head()
-    val sigB = (if (st.isNullAt(1)) 0L else st.getLong(1)) * 8L
-    val shB = (if (st.isNullAt(2)) 0L else st.getLong(2)) * 8L
-    if (sigB > (1L << 30) || shB > (2L << 30)) None
-    else {
-      val rows = sigs.select(col("__id"), col("minhash_sig"), col("shingles"))
-        .collect()
-      java.util.Arrays.sort(rows,
-        java.util.Comparator.comparingLong(
-          (r: org.apache.spark.sql.Row) => r.getLong(0)))
-      val n = rows.length
-      val ids = new Array[Long](n)
-      val sg = new Array[Array[Long]](n)
-      val sh = new Array[Array[Long]](n)
-      var i = 0
-      while (i < n) {
-        val r = rows(i)
-        ids(i) = r.getLong(0)
-        sg(i) = r.getSeq[Long](1).toArray
-        sh(i) = r.getSeq[Long](2).toArray
-        i += 1
-      }
-      Some(sigs.sparkSession.sparkContext.broadcast(new RepLookup(ids, sg, sh)))
-    }
+  /** The within-corpus pair tail over a signature table: banding,
+    * mega-bucket cap, signature-estimate prefilter, exact hashed-shingle
+    * verify → (id_a < id_b, jaccard), one row per pair. Ids equal on
+    * both sides never pair.
+    *
+    * With a lookup, the fused bucket kernel ([[fusedBucketPairs]]) runs
+    * enumeration, est and verify in one loop per uncapped bucket; the
+    * staged form — bucket self-join, est over joined signature
+    * prefixes, distinct, verify over joined shingle arrays — serves
+    * tables past the lookup bounds. est and jaccard are pure functions
+    * of the pair, so both emit the identical pair set and values.
+    */
+  private def withinPairs(t: SigTable,
+      lookup: Option[org.apache.spark.broadcast.Broadcast[RepLookup]],
+      numHashes: Int, bands: Int, tau: Double, cap: Int): DataFrame = {
+    val banded0 = bandsOf(t.df, numHashes, bands)
+    (lookup match {
+      case Some(l) =>
+        fusedBucketPairs(banded0, l, numHashes, estCutoff(tau), tau, cap)
+          .dropDuplicates("id_a", "id_b")
+      case None =>
+        val banded = capped(banded0, cap)
+        val candRaw = banded.select(col("band"), col("band_hash"), col("__id").as("id_a"))
+          .join(banded.select(col("band"), col("band_hash"), col("__id").as("id_b")),
+            Seq("band", "band_hash"))
+          .filter(col("id_a") < col("id_b"))
+          .select("id_a", "id_b")
+        // When the sig prefixes fit a 1 GiB broadcast, the est runs as a
+        // MAP-ONLY filter over the raw (still band-duplicated) candidate
+        // stream and only survivors are deduplicated: dedup-first sorts
+        // the FULL candidate mass (a 476 M-row sort at sf10-mutated
+        // filled a 75 GB disk). Past the bound the dedup-first shuffle
+        // join remains.
+        val sigsSmall = t.rows * numHashes * 8L <= (1L << 30)
+        val sig = slice(col("minhash_sig"), 1, numHashes)
+        def sigSide(idAs: String, as: String) = {
+          val s = t.side(sig, idAs, as); if (sigsSmall) broadcast(s) else s
+        }
+        def shSide(idAs: String, as: String) = {
+          val s = t.side(col("__sh"), idAs, as)
+          if (t.shBytes <= (2L << 30)) broadcast(s) else s
+        }
+        def est(c: DataFrame) = estJoin(c, "id_a", "id_b",
+          sigSide("id_a", "__sa"), sigSide("id_b", "__sb"), numHashes, estCutoff(tau))
+        val survivors =
+          if (sigsSmall) est(candRaw).dropDuplicates("id_a", "id_b")
+          else est(candRaw.dropDuplicates("id_a", "id_b"))
+        verifyJoin(survivors, "id_a", "id_b",
+          shSide("id_a", "__ha"), shSide("id_b", "__hb"), tau)
+    }).filter(col("jaccard") >= tau)
+      .select("id_a", "id_b", "jaccard")
   }
 
-  /** Shared est-prefilter + exact-verify tail over candidate id pairs —
-    * staged like [[pairsFromRepSpace]]: when both signature tables fit
-    * the broadcast-lookup bounds the candidate stream stays 16
-    * bytes/row and the arrays are probed inside the UDFs (bit-identical
-    * arithmetic); otherwise the estimate pass joins SIGNATURES only
-    * (16·numHashes bytes/row) and shingle arrays move only for the
-    * verified tail. Each candidate side uses its OWN signature table
-    * (`sigsA` for `aCol`, `sigsB` for `bCol`) so two-table callers
-    * stay well-defined even when an id appears in both tables;
-    * single-table callers pass the same frame twice. */
-  private def verifySigCandidates(cand: DataFrame, aCol: String, bCol: String,
-      sigsA: DataFrame, sigsB: DataFrame,
-      numHashes: Int, jaccardThreshold: Double): DataFrame = {
-    val estCutoff = math.max(0.0, jaccardThreshold - 0.25)
-    val la = sigTableLookup(sigsA)
-    val lb = if (sigsA eq sigsB) la else sigTableLookup(sigsB)
-    (la, lb) match {
-      case (Some(ba), Some(bb)) =>
-        val width = numHashes
-        val cutoff = estCutoff
-        val estOk = udf { (ia: Long, ib: Long) =>
-          val a0 = ba.value; val b0 = bb.value
-          val x = a0.idx(ia); val y = b0.idx(ib)
-          x >= 0 && y >= 0 && {
-            val a = a0.sigs(x); val b = b0.sigs(y)
-            var i = 0
-            var eq = 0
-            val n = math.min(width, math.min(a.length, b.length))
-            while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
-            eq.toDouble / width >= cutoff
-          }
-        }
-        val jac = udf { (ia: Long, ib: Long) =>
-          val a0 = ba.value; val b0 = bb.value
-          val x = a0.idx(ia); val y = b0.idx(ib)
-          if (x < 0 || y < 0) 0.0
-          else {
-            val a = a0.shs(x); val b = b0.shs(y)
-            if (a.isEmpty && b.isEmpty) 0.0
-            else {
-              var i = 0; var j = 0; var inter = 0
-              while (i < a.length && j < b.length) {
-                val u = a(i); val v = b(j)
-                if (u == v) { inter += 1; i += 1; j += 1 }
-                else if (u < v) i += 1
-                else j += 1
+  /** Fused bucket-local candidate + est + verify (r17): buckets
+    * (≤ cap ids each, sorted) flatMap through an iterator that runs
+    * [[PairKernel]] per i<j pair, so the candidate stream never becomes
+    * rows and only verified pairs materialize (duplicates across bands
+    * collapse in the caller's distinct over the VERIFIED set). The r16
+    * staged shape materialized every capped candidate and shuffled every
+    * est survivor: at sf1-mutated the R=0.99 audit point enumerates
+    * 242 M candidates, est passes 124 M and 16 807 verify — 52 s of
+    * wall for a 17 k-row answer. Shuffle cost drops from O(capped
+    * candidates) to O(reps · bands + verified pairs).
+    *
+    * The cap rides the bucket aggregation (bucket size IS the collected
+    * list's size). Each surviving bucket is SPLIT into chunks of ≲2¹⁷
+    * pairs (outer index i strided by chunk count — a disjoint exact
+    * partition of the i<j pair space) and the chunks round-robin-
+    * repartitioned to the session parallelism: bucket rows are a few KB
+    * while their pair loops are C(n,2) CPU, so AQE's byte-based
+    * coalescing otherwise folds the whole corpus' pair work onto 1-2
+    * partitions (sf0.1: 23.5 s → 12.8 s for one point), and a capped
+    * mega-bucket (C(7608,2) ≈ 29 M pairs) otherwise lands on ONE core.
+    * An explicit partition count is exempt from AQE coalescing.
+    */
+  private def fusedBucketPairs(banded0: DataFrame,
+      lookup: org.apache.spark.broadcast.Broadcast[RepLookup],
+      width: Int, cutoff: Double, tau: Double, cap: Int): DataFrame = {
+    val chunkPairs = 1L << 17
+    val sz = size(col("__ids")).cast("long")
+    val buckets = banded0
+      .groupBy(col("band"), col("band_hash"))
+      .agg(collect_list(col("__id")).as("__ids"))
+      .filter(size(col("__ids")) >= 2 && size(col("__ids")) <= cap)
+      .select(col("__ids"),
+        greatest(lit(1L), (sz * (sz - 1L) / 2L + (chunkPairs - 1L)) / chunkPairs)
+          .cast("int").as("__nc"))
+      .select(col("__ids"), col("__nc"),
+        explode(sequence(lit(0), col("__nc") - 1)).as("__c"))
+      .toDF("_1", "_2", "_3")
+    val sess = buckets.sparkSession
+    import sess.implicits._
+    val minEq = PairKernel.minEq(width, cutoff)
+    buckets
+      .repartition(sess.sparkContext.defaultParallelism)
+      .as[(Array[Long], Int, Int)]
+      .flatMap { case (raw, nc, c) =>
+        val l = lookup.value
+        val ids = raw.clone()
+        java.util.Arrays.sort(ids)
+        val m = ids.length
+        // Hoist the lookups once per chunk: the inner loop would
+        // otherwise binary-search the lookup per CANDIDATE.
+        val xs = ids.map(l.idx)
+        val sig = xs.map(x => if (x >= 0) l.sigs(x) else null)
+        val sh = xs.map(x => if (x >= 0) l.shs(x) else null)
+        // rows i ≡ c (mod nc), every j > i
+        new scala.collection.AbstractIterator[(Long, Long, Double)] {
+          private var i = c
+          private var j = c
+          private var nxt: (Long, Long, Double) = _
+          advance()
+          private def advance(): Unit = {
+            nxt = null
+            while ((nxt eq null) && i < m - 1) {
+              j += 1
+              if (j >= m) { i += nc; j = i }
+              else if ((sig(i) ne null) && (sig(j) ne null) && ids(i) != ids(j)) {
+                val jac = PairKernel.pair(sig(i), sh(i), sig(j), sh(j), width, minEq, tau)
+                if (jac >= 0.0) nxt = (ids(i), ids(j), jac)
               }
-              val union = a.length + b.length - inter
-              if (union == 0) 0.0 else inter.toDouble / union
             }
           }
+          def hasNext: Boolean = nxt ne null
+          def next(): (Long, Long, Double) = { val r = nxt; advance(); r }
         }
-        cand.filter(estOk(col(aCol), col(bCol)))
-          .withColumn("jaccard", jac(col(aCol), col(bCol)))
-          .filter(col("jaccard") >= jaccardThreshold)
-          .select(col(aCol), col(bCol), col("jaccard"))
-      case _ =>
-        val est = cand
-          .join(sigsA.select(col("__id").as(aCol), col("minhash_sig").as("__siga")), Seq(aCol))
-          .join(sigsB.select(col("__id").as(bCol), col("minhash_sig").as("__sigb")), Seq(bCol))
-          .withColumn("est",
-            sigEqCount(col("__siga"), col("__sigb")).cast("double") / numHashes)
-          .filter(col("est") >= estCutoff)
-          .select(aCol, bCol)
-        est
-          .join(sigsA.select(col("__id").as(aCol), col("shingles").as("__sha")), Seq(aCol))
-          .join(sigsB.select(col("__id").as(bCol), col("shingles").as("__shb")), Seq(bCol))
-          .withColumn("jaccard", jaccardOfSortedLongs(col("__sha"), col("__shb")))
-          .filter(col("jaccard") >= jaccardThreshold)
-          .select(col(aCol), col(bCol), col("jaccard"))
+      }.toDF("id_a", "id_b", "jaccard")
+  }
+
+  /** Staged est: join each candidate side's signature (`sigA`/`sigB`:
+    * id → `__sa`/`__sb`) and keep the pairs passing
+    * [[PairKernel.estOk]]. Broadcast / shuffle-hash hints ride on the
+    * side frames. */
+  private def estJoin(cand: DataFrame, aCol: String, bCol: String,
+      sigA: DataFrame, sigB: DataFrame, width: Int, cutoff: Double): DataFrame = {
+    val minEq = PairKernel.minEq(width, cutoff)
+    val est = udf { (a: Array[Long], b: Array[Long]) =>
+      PairKernel.estOk(a, b, width, minEq) }
+    cand.join(sigA, Seq(aCol)).join(sigB, Seq(bCol))
+      .filter(est(col("__sa"), col("__sb")))
+      .select(aCol, bCol)
+  }
+
+  /** Staged verify: join each side's shingle set (`shA`/`shB`: id →
+    * `__ha`/`__hb`) and attach [[PairKernel.jaccard]] (-1 below τ). */
+  private def verifyJoin(cand: DataFrame, aCol: String, bCol: String,
+      shA: DataFrame, shB: DataFrame, tau: Double): DataFrame = {
+    val jac = udf { (a: Array[Long], b: Array[Long]) =>
+      if (a == null || b == null) -1.0 else PairKernel.jaccard(a, b, tau) }
+    cand.join(shA, Seq(aCol)).join(shB, Seq(bCol))
+      .withColumn("jaccard", jac(col("__ha"), col("__hb")))
+      .select(aCol, bCol, "jaccard")
+  }
+
+  /** The batch-vs-index pair tail: the batch table's bands probe the
+    * index table's buckets of at most `cap` rows, `candFilter` drops
+    * candidates that are spoken for, and est + verify yield oriented
+    * (__bid, __iid, jaccard) rows at jaccard ≥ τ. Each side reads only
+    * its OWN table, so an id present in both stays well-defined.
+    *
+    * With both lookups, est and verify run candidate-local in one UDF
+    * (the candidate stream stays 16 bytes/row). Otherwise the staged
+    * form broadcasts the batch side (model-sized by definition) under
+    * the 1 GiB bound and SHUFFLE_HASH-joins it past the bound; the index
+    * side's arrays are corpus-sized, so it is always SHUFFLE_HASH — a
+    * sort-merge join would sort gigabytes of sig/shingle ARRAYS per
+    * candidate (the measured sf10m disk fill), where a hash join moves
+    * each side exactly once and streams the probe.
+    */
+  private def betweenPairs(batch: SigTable, index: SigTable,
+      lookups: Option[(org.apache.spark.broadcast.Broadcast[RepLookup],
+        org.apache.spark.broadcast.Broadcast[RepLookup])],
+      numHashes: Int, bands: Int, tau: Double, cap: Int,
+      candFilter: DataFrame => DataFrame): DataFrame = {
+    val cand = candFilter(
+      bandsOf(batch.df, numHashes, bands)
+        .select(col("band"), col("band_hash"), col("__id").as("__bid"))
+        .join(capped(bandsOf(index.df, numHashes, bands), cap)
+          .select(col("band"), col("band_hash"), col("__id").as("__iid")),
+          Seq("band", "band_hash"))
+        .select("__bid", "__iid")
+        .dropDuplicates("__bid", "__iid"))
+    (lookups match {
+      case Some((bl, il)) =>
+        // est as its own filter: the jaccard filter is pushed below the
+        // verify projection, so a UDF there runs twice per row it sees
+        val minEq = PairKernel.minEq(numHashes, estCutoff(tau))
+        val est = udf { (b: Long, i: Long) =>
+          val x = bl.value.idx(b); val y = il.value.idx(i)
+          x >= 0 && y >= 0 &&
+            PairKernel.estOk(bl.value.sigs(x), il.value.sigs(y), numHashes, minEq)
+        }
+        val verify = udf { (b: Long, i: Long) =>
+          val x = bl.value.idx(b); val y = il.value.idx(i)
+          if (x < 0 || y < 0) -1.0
+          else PairKernel.jaccard(bl.value.shs(x), il.value.shs(y), tau)
+        }
+        cand.filter(est(col("__bid"), col("__iid")))
+          .withColumn("jaccard", verify(col("__bid"), col("__iid")))
+      case None =>
+        val batchSmall = batch.rows * numHashes * 8L <= (1L << 30)
+        def bSide(c: org.apache.spark.sql.Column, as: String) = {
+          val s = batch.side(c, "__bid", as)
+          if (batchSmall) broadcast(s) else s.hint("SHUFFLE_HASH")
+        }
+        def iSide(c: org.apache.spark.sql.Column, as: String) =
+          index.side(c, "__iid", as).hint("SHUFFLE_HASH")
+        val sig = slice(col("minhash_sig"), 1, numHashes)
+        verifyJoin(
+          estJoin(cand, "__bid", "__iid", bSide(sig, "__sa"), iSide(sig, "__sb"),
+            numHashes, estCutoff(tau)),
+          "__bid", "__iid", bSide(col("__sh"), "__ha"), iSide(col("__sh"), "__hb"), tau)
+    }).filter(col("jaccard") >= tau)
+      .select("__bid", "__iid", "jaccard")
+  }
+
+  /** One fused (signature, hashed-shingle-set) pass over a batch — the
+    * columns an incremental dedup index PERSISTS so steady-state ingest
+    * never re-hashes previously indexed text (e2e_corpus_curation stores
+    * these next to the curated rows and re-reads them as the index side
+    * of every later drop). Returns (idCol, minhash_sig, shingles).
+    */
+  def minHashSigTable(docs: DataFrame, idCol: String, textCol: String,
+      shingleLen: Int, numHashes: Int): DataFrame =
+    graft.core.Tables.scatter(docs)
+      .select(col(idCol),
+        sigAndHashedShingles(shingleLen, numHashes)(col(textCol)).as("__c"))
+      .select(col(idCol), col("__c._1").as("minhash_sig"), col("__c._2").as("shingles"))
+
+  /** Verified near-dup pairs WITHIN one precomputed signature table
+    * ([[minHashSigTable]]'s columns) — the within tail, capless;
+    * (id_a < id_b, jaccard). No identity collapse: callers on
+    * duplicate-heavy corpora want [[minHashDupPairs]]; this is the
+    * primitive for pipelines that already own a signature store.
+    */
+  def minHashPairsWithinSigs(sigs: DataFrame, idCol: String,
+      numHashes: Int, bands: Int, jaccardThreshold: Double): DataFrame =
+    sigPairs(sigs, None, idCol, numHashes, bands, jaccardThreshold, lookups = true)
+
+  /** Verified near-dup pairs BETWEEN a batch signature table and a
+    * (typically persisted) index signature table — the steady-state
+    * ingest join with zero re-hashing of index text, capless. Candidates
+    * keep their (batch id, index id) orientation through est and verify
+    * (equal ids are dropped). Returns (id_a, id_b, jaccard) with
+    * id_a < id_b, ONE row per unordered pair: when ids overlap between
+    * the tables a pair can band together in BOTH orientations, and the
+    * two verifies may even differ if the same id carries different text
+    * per table — the MAX jaccard across orientations is kept
+    * (deterministic, and the identity when they agree).
+    */
+  def minHashPairsBetweenSigs(batchSigs: DataFrame, indexSigs: DataFrame,
+      idCol: String, numHashes: Int, bands: Int, jaccardThreshold: Double): DataFrame =
+    sigPairs(batchSigs, Some(indexSigs), idCol, numHashes, bands, jaccardThreshold,
+      lookups = true)
+
+  /** The two signature-table entry points; `lookups = false` forces the
+    * staged tails (the differential specs pin both forms). */
+  private[graft] def sigPairs(sigs: DataFrame, indexSigs: Option[DataFrame],
+      idCol: String, numHashes: Int, bands: Int, tau: Double,
+      lookups: Boolean): DataFrame = {
+    val t = sigTableOf(sigs, idCol)
+    indexSigs match {
+      case None =>
+        withinPairs(t, if (lookups) t.lookup else None, numHashes, bands, tau,
+          Int.MaxValue)
+      case Some(ix) =>
+        val i = sigTableOf(ix, idCol)
+        betweenPairs(t, i,
+          if (lookups) for (bl <- t.lookup; il <- i.lookup) yield (bl, il) else None,
+          numHashes, bands, tau, Int.MaxValue,
+          _.filter(col("__bid") =!= col("__iid")))
+          .select(least(col("__bid"), col("__iid")).as("id_a"),
+            greatest(col("__bid"), col("__iid")).as("id_b"), col("jaccard"))
+          .groupBy(col("id_a"), col("id_b"))
+          .agg(max(col("jaccard")).as("jaccard"))
     }
   }
 
-  /** [[minHashDupAgainstIndex]] at the DERIVED operating point — the
-    * same discipline as [[minHashDupPairsAuto]]: (rowsPerBand, bands)
-    * analytically from (τ, targetRecall), the index-side mega-bucket
-    * cap from the measured bucket-size histogram's largest relative
-    * gap. The steady-state ingest operator thereby inherits the
-    * bootstrap operator's recall guarantee instead of a hand-set knob
-    * calibrated for a different band shape.
+  /** Incremental MinHash dedup of a NEW batch against an EXISTING corpus
+    * index at the derived operating point — the continuous-ingest shape:
+    * each arriving batch joins its own bands against the index only (no
+    * within-batch or within-index pairs; those are [[minHashDupPairs]]'s
+    * job at bootstrap). Returns (new_id, index_id, jaccard).
     *
-    * Candidate-mass bound (r16): the asymmetric join's mass is linear
-    * in the BATCH by construction — each batch-rep band row probes one
-    * index bucket of cap-surviving size ≤ cap, so candidates
-    * ≤ batchReps × bands × cap. That bound is only as good as the cap:
-    * on a knee-less histogram (the mutated scale corpus) the gap rule
-    * degenerates to cap = max bucket size, and the first sf10-mutated
-    * run of this path filled a 62 GB disk through exactly that hole.
-    * So the auto path carries the budget construction after all —
-    * `budgetPairsPerBatchRep` (default 1024) measures the EXACT
-    * pre-join mass from the (index bucket size, batch hits) histogram
-    * (mass = Σ n·hits, the asymmetric analogue of the self-join's
-    * Σ C(n,2)) and lowers the cap until candidates ≤ budget × batchReps
-    * BY CONSTRUCTION; identical batch/index texts still pair
-    * unconditionally below the cap, so the recall floor survives even
-    * the cap-1 floor. (Measured: dd_incremental_index at sf10-mutated
-    * in BASELINE.md r16.)
+    *  - Shape: `lshAutoShape(τ, TargetRecall, MaxBands)`; the cap applies
+    *    to INDEX-side buckets (batch buckets are batch-sized) and starts
+    *    from the index histogram's gap rule.
+    *  - Budget: the asymmetric join's mass is ≤ batchReps × bands × cap,
+    *    only as good as the cap — on a knee-less histogram the gap rule
+    *    degenerates to cap = max bucket size, and the first sf10-mutated
+    *    run filled a 62 GB disk through that hole. The EXACT pre-join
+    *    mass is measurable from the (index bucket size n, batch hits m)
+    *    histogram (Σ n·m, the asymmetric analogue of Σ C(n,2)), so the
+    *    cap is lowered until candidates ≤ `budgetPairsPerBatchRep` ×
+    *    batchReps BY CONSTRUCTION.
+    *  - Identity collapse on BOTH sides (r14, found by the full sf10
+    *    board: the uncollapsed join exploded multiplicatively in copy
+    *    counts, 1147 s on the verbatim corpus): reps pair, members fan
+    *    out at emission, and identical batch/index texts pair
+    *    UNCONDITIONALLY at jaccard 1.0 — banding and the cap never see
+    *    them, so the recall floor survives even the cap-1 floor. Both
+    *    sides reuse the session rep-space memo, so the index side IS the
+    *    corpus the within-corpus family already collapsed.
     */
   def minHashDupAgainstIndexAuto(index: DataFrame, batch: DataFrame,
       idCol: String, textCol: String,
       shingleLen: Int = 5, jaccardThreshold: Double = 0.6,
-      targetRecall: Double = 0.99, maxBands: Int = 64,
-      minOutlierBucket: Int = 16, outlierGapRatio: Double = 1.5,
       budgetPairsPerBatchRep: Long = 1024L): DataFrame = {
-    val (r, b) = lshAutoShape(jaccardThreshold, targetRecall, maxBands)
-    minHashAgainstIndexCore(index, batch, idCol, textCol, shingleLen,
-      r * b, b, jaccardThreshold, Right((minOutlierBucket, outlierGapRatio)),
-      Some(budgetPairsPerBatchRep))
-  }
-
-  // r14, found by the full sf10 board: the asymmetric ingest join now
-  // runs the SAME identity collapse as minHashPairsCore, on BOTH sides.
-  // On a duplicate-heavy corpus (the verbatim ScaleUp corpus: 100
-  // identical copies per text) the uncollapsed batch×index bucket join
-  // exploded multiplicatively in copy counts — 1147 s at sf10 at the
-  // auto point — while the collapsed pipeline pays for DISTINCT texts
-  // and fans members out only at emission. Same two recall wins as the
-  // bootstrap fix: identical batch/index texts pair UNCONDITIONALLY
-  // (pre-collapse a big-enough identical cohort blew past the cap and
-  // its jaccard-1.0 matches silently vanished), and the index-side cap
-  // counts DISTINCT texts — the mega-bucket definition intended all
-  // along.
-  private def minHashAgainstIndexCore(index: DataFrame, batch: DataFrame,
-      idCol: String, textCol: String,
-      shingleLen: Int, numHashes: Int, bands: Int,
-      jaccardThreshold: Double, capSpec: Either[Int, (Int, Double)],
-      budgetPairsPerBatchRep: Option[Long] = None): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands=$bands must divide numHashes=$numHashes")
     require(jaccardThreshold > 0,
       "threshold must be positive — identical batch/index texts emit " +
       "unconditionally at jaccard 1.0, which matches the uncollapsed " +
       "semantics only for τ > 0")
-    val rowsPerBand = numHashes / bands
-    // r16: both sides run the SHARED identity collapse + fused signature
-    // pass ([[collapseToReps]] — scratch-parquet-backed, session-
-    // memoized). The index side of a steady-state ingest IS the corpus
-    // the within-corpus family already collapsed, so the board's
-    // incremental queries inherit that signature asset by memo instead
-    // of re-normalizing and re-hashing the corpus per query — the
-    // single-node shape of "the index side's banded signatures are
-    // precomputed once" this scaladoc always promised.
+    val (r, bands) = lshAutoShape(jaccardThreshold, TargetRecall, MaxBands)
+    val numHashes = r * bands
     val iRs = collapseToReps(index, idCol, textCol, shingleLen, numHashes)
     val bRs = collapseToReps(batch, idCol, textCol, shingleLen, numHashes)
     val iMem = iRs.members
     val bMem = bRs.members
-    // identical texts across the boundary: every (batch member, index
-    // member) pair, unconditionally — banding and the cap never see them
     val samePairs = bMem.select(col("__k"), col("__id").as("new_id"))
       .join(iMem.select(col("__k"), col("__id").as("index_id")), Seq("__k"))
       .select(col("new_id"), col("index_id"), lit(1.0).as("jaccard"))
-    // prefix-slice each side's (possibly wider) memoized signature
-    def perDocOf(rs: RepSpace) = rs.perDoc
-      .select(col("__id"), col("__k"),
-        slice(col("minhash_sig"), 1, numHashes).as("sig"), col("__sh"))
-    def bandedOf(sigs: DataFrame) = sigs.select(col("__id"),
-      posexplode(array((0 until bands).map { b =>
-        xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)
-          .cast("array<string>").cast("string"))
-      }: _*)).as(Seq("band", "band_hash")))
-    val idxDoc = perDocOf(iRs)
-    val newDoc = perDocOf(bRs)
-    val idxBand0 = bandedOf(idxDoc.select(col("__id"), col("sig")))
-    // r16: the index-side bucket histogram is a pure function of the
-    // rep space and the band shape — callers that differ only in the
-    // BUDGET applied to it (dd_incremental_index vs _budget run the
-    // same corpus at budget 1024 vs 4) re-ran the full banding
-    // aggregation to re-derive the same model-sized array. Session-
-    // memoized like the rep spaces themselves.
-    val idxHist = bandHistOf(iRs, numHashes, bands)
-    val gapCap = capSpec match {
-      case Left(fixed) => fixed
-      case Right((minOutlier, gapRatio)) =>
-        autoBucketCapFromHist(idxHist, minOutlier, gapRatio)
-    }
-    val bucketN = idxBand0.groupBy(col("band"), col("band_hash"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= gapCap)
-      .persist()
-    val newBand = bandedOf(newDoc.select(col("__id"), col("sig")))
-    // Budget-derived cap refinement (r16, found by the sf10m run that
-    // filled the disk): on a knee-less bucket histogram the gap rule
-    // degenerates to cap = max bucket size, and the batch×index join's
-    // mass — linear in the batch but ∝ cap — can still explode. The
-    // EXACT mass is measurable before the join: each batch band row
-    // matched to an index bucket of (cap-surviving) size n contributes
-    // n candidates, so the (n, hits) histogram's running sum gives the
-    // largest cap whose total mass fits budget·batchReps — candidates
-    // ≤ budget × batchReps BY CONSTRUCTION, the incremental twin of
-    // minHashDupPairsBudgeted's tier-3 rule (floor 1: identical texts
-    // still pair unconditionally below).
-    val nBatchReps = bRs.nReps
-    val maxBucketSize = budgetPairsPerBatchRep match {
-      case None => gapCap
-      case Some(budget) =>
-        // the (bucket size, batch hits) mass histogram is likewise
-        // budget-INDEPENDENT (the budget is applied to it afterwards,
-        // in budgetCapFromMassHist) — memoize it so the probe join
-        // runs once per (index, batch, shape), not once per budget
-        val hits = massHistMemo.getOrElseUpdate(
-          (iRs, bRs, numHashes, bands, gapCap),
-          newBand.select(col("band"), col("band_hash"))
-            .join(bucketN, Seq("band", "band_hash"))
-            .groupBy(col("__n")).agg(count(lit(1)).as("__m"))
-            .orderBy(col("__n")).collect()
-            .map(r => (r.getLong(0), r.getLong(1))))
-        math.min(gapCap.toLong,
-          budgetCapFromMassHist(hits, budget * nBatchReps).toLong).toInt
-    }
-    val okBuckets = bucketN.filter(col("__n") <= maxBucketSize)
-      .drop("__n")
-    val idxBand = idxBand0.join(okBuckets, Seq("band", "band_hash"), "left_semi")
+    val gapCap = autoBucketCapFromHist(bandHistOf(iRs.table, numHashes, bands))
+    // the mass histogram is budget-INDEPENDENT (the budget is applied
+    // afterwards) — memoized so the probe join runs once per (index,
+    // batch, shape), not once per budget
+    val hits = massHistMemo.getOrElseUpdate(
+      (iRs.table, bRs.table, numHashes, bands, gapCap),
+      bandsOf(bRs.table.df, numHashes, bands).select(col("band"), col("band_hash"))
+        .join(bucketSizes(bandsOf(iRs.table.df, numHashes, bands))
+          .filter(col("__n") <= gapCap), Seq("band", "band_hash"))
+        .groupBy(col("__n")).agg(count(lit(1)).as("__m"))
+        .orderBy(col("__n")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))))
+    val cap = math.min(gapCap.toLong, budgetCapFromMassHist(hits,
+      budgetPairsPerBatchRep * bRs.table.rows).toLong).toInt
     // same-text rep pairs are spoken for (emitted above at 1.0): drop
     // them by anti-joining the (model-sized) identical-key rep pairs
-    // instead of dragging 32-byte identity keys through the candidate
-    // stream
-    val sameRepPairs = bRs.perDoc.select(col("__k"), col("__id").as("new_rid"))
-      .join(iRs.perDoc.select(col("__k"), col("__id").as("index_rid")), Seq("__k"))
-      .select("new_rid", "index_rid")
-    val cand = newBand.select(col("band"), col("band_hash"), col("__id").as("new_rid"))
-      .join(idxBand.select(col("band"), col("band_hash"), col("__id").as("index_rid")),
-        Seq("band", "band_hash"))
-      .select("new_rid", "index_rid")
-      .dropDuplicates("new_rid", "index_rid")
-      .join(sameRepPairs, Seq("new_rid", "index_rid"), "left_anti")
-    // est/verify staging (r16 — the sf10m disk-fill's second half): the
-    // batch side is model-sized by definition, so BROADCAST it under
-    // the same 1 GiB payload bound as the within-corpus path; the index
-    // side's array payload is corpus-sized, so force a SHUFFLE_HASH
-    // join — a sort-merge join would sort gigabytes of sig/shingle
-    // ARRAYS per candidate (the measured failure), where a hash join
-    // moves each side exactly once and streams the probe.
-    val batchSmall = nBatchReps * numHashes * 8L <= (1L << 30)
-    def newSide(c1: String, as1: String) = {
-      val s = newDoc.select(col("__id").as("new_rid"), col(c1).as(as1))
-      if (batchSmall) broadcast(s) else s.hint("SHUFFLE_HASH")
-    }
-    def idxSide(c1: String, as1: String) =
-      idxDoc.select(col("__id").as("index_rid"), col(c1).as(as1))
-        .hint("SHUFFLE_HASH")
-    val estCutoff = math.max(0.0, jaccardThreshold - 0.25)
-    // Candidate-local est + verify when BOTH sides' rep tables fit the
-    // documented broadcast bounds (same rule and same arithmetic as the
-    // within-corpus [[pairsFromRepSpace]] fast path): the candidate
-    // stream stays 16 bytes/row and the arrays are probed from the two
-    // shared lookups instead of materialized per candidate through four
-    // joins. Past the bounds (the sf10m regime) the broadcast/
-    // SHUFFLE_HASH staging below remains — nothing wide is ever sorted.
-    val repPairs = ((iRs.lookup, bRs.lookup) match {
-      case (Some(il), Some(bl)) =>
-        val width = numHashes
-        val cutoff = estCutoff
-        val estOk = udf { (ib: Long, ii: Long) =>
-          val lb = bl.value; val li = il.value
-          val x = lb.idx(ib); val y = li.idx(ii)
-          x >= 0 && y >= 0 && {
-            val a = lb.sigs(x); val b = li.sigs(y)
-            var i = 0
-            var eq = 0
-            val n = math.min(width, math.min(a.length, b.length))
-            while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
-            eq.toDouble / width >= cutoff
-          }
-        }
-        val jac = udf { (ib: Long, ii: Long) =>
-          val lb = bl.value; val li = il.value
-          val x = lb.idx(ib); val y = li.idx(ii)
-          if (x < 0 || y < 0) 0.0
-          else {
-            val a = lb.shs(x); val b = li.shs(y)
-            if (a.isEmpty && b.isEmpty) 0.0
-            else {
-              var i = 0; var j = 0; var inter = 0
-              while (i < a.length && j < b.length) {
-                val u = a(i); val v = b(j)
-                if (u == v) { inter += 1; i += 1; j += 1 }
-                else if (u < v) i += 1
-                else j += 1
-              }
-              val union = a.length + b.length - inter
-              if (union == 0) 0.0 else inter.toDouble / union
-            }
-          }
-        }
-        cand.filter(estOk(col("new_rid"), col("index_rid")))
-          .withColumn("jaccard", jac(col("new_rid"), col("index_rid")))
-      case _ =>
-        cand
-          .join(newSide("sig", "sig_n"), Seq("new_rid"))
-          .join(idxSide("sig", "sig_i"), Seq("index_rid"))
-          .withColumn("est",
-            sigEqCount(col("sig_n"), col("sig_i")).cast("double") / numHashes)
-          .filter(col("est") >= estCutoff)
-          .select("new_rid", "index_rid")
-          .join(newSide("__sh", "sh_n"), Seq("new_rid"))
-          .join(idxSide("__sh", "sh_i"), Seq("index_rid"))
-          .withColumn("jaccard", jaccardOfSortedLongs(col("sh_n"), col("sh_i")))
-    })
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select("new_rid", "index_rid", "jaccard")
+    // instead of dragging 32-byte identity keys through the candidates
+    val sameRepPairs = bRs.table.df.select(col("__k"), col("__id").as("__bid"))
+      .join(iRs.table.df.select(col("__k"), col("__id").as("__iid")), Seq("__k"))
+      .select("__bid", "__iid")
+    val repPairs = betweenPairs(bRs.table, iRs.table,
+      for (bl <- bRs.table.lookup; il <- iRs.table.lookup) yield (bl, il),
+      numHashes, bands, jaccardThreshold, cap,
+      _.join(sameRepPairs, Seq("__bid", "__iid"), "left_anti"))
     // emission fan-out: cross-rep member pairs inherit their reps' exact
     // jaccard (identical texts are interchangeable)
     val crossPairs = repPairs
-      .join(bMem.select(col("__rid").as("new_rid"), col("__id").as("new_id")),
-        Seq("new_rid"))
-      .join(iMem.select(col("__rid").as("index_rid"), col("__id").as("index_id")),
-        Seq("index_rid"))
+      .join(bMem.select(col("__rid").as("__bid"), col("__id").as("new_id")), Seq("__bid"))
+      .join(iMem.select(col("__rid").as("__iid"), col("__id").as("index_id")), Seq("__iid"))
       .select(col("new_id"), col("index_id"), col("jaccard"))
     val out = crossPairs.unionByName(samePairs).persist()
-    timed(s"against-index: full pipeline nh=$numHashes b=$bands " +
-      s"cap=$maxBucketSize")(out.count())
-    bucketN.unpersist()
-    iRs.release(); bRs.release()
+    out.count()
     out
   }
 
@@ -2418,12 +1990,26 @@ object Dedup {
     }
   }
 
+  /** Whether the PPJoin kernels run their fused posting enumeration:
+    * long ids and `graft.ppjoin.fused` not "off" (a test seam that pins
+    * the fused kernels against the join form). */
+  private def ppFused(sets: DataFrame): Boolean =
+    sys.props.get("graft.ppjoin.fused").getOrElse("on") != "off" &&
+      sets.schema("__id").dataType == org.apache.spark.sql.types.LongType
+
+  /** Admission estimate of a [[SetsLookup]] payload from the total
+    * shingle chars and shingle count: per shingle its chars, ~24 bytes
+    * of String/array-slot overhead, and the 8-byte FNV hash the lookup
+    * builds beside it. */
+  private[graft] def setsLookupBytes(chars: Long, shingles: Long): Long =
+    chars + shingles * (24L + 8L)
+
   /** Driver-built lookup over a (__id, __sh) string-shingle table —
-    * the [[RepSpace.lookup]] discipline for the exact PPJoin kernels:
+    * the [[SigTable.lookup]] discipline for the exact PPJoin kernels:
     * their verify step joined two ~KB string arrays onto every
     * candidate row (the same payload drag §1 measured on the MinHash
     * family). One column-pruned stats aggregate bounds the payload
-    * (string bytes + per-entry overhead ≤ 1 GiB, long ids); past the
+    * ([[setsLookupBytes]] ≤ 1 GiB, long ids); past the
     * bound the join form below stays. Memoized next to the sets table
     * so the collect runs once per (corpus, shingleLen) session-wide. */
   private val ppLookupMemo = new graft.core.BoundedMemo[String,
@@ -2435,10 +2021,10 @@ object Dedup {
           org.apache.spark.sql.types.LongType) None
       else {
         val st = sets.agg(
-          sum(expr("aggregate(transform(__sh, x -> length(x) + 24L)," +
-            " 0L, (a, x) -> a + x)"))).head()
-        val bytes = if (st.isNullAt(0)) 0L else st.getLong(0)
-        if (bytes > (1L << 30)) None
+          sum(expr("aggregate(__sh, 0L, (a, x) -> a + length(x))")),
+          sum(size(col("__sh")).cast("long"))).head()
+        def long(i: Int) = if (st.isNullAt(i)) 0L else st.getLong(i)
+        if (setsLookupBytes(long(0), long(1)) > (1L << 30)) None
         else {
           val rows = sets.select(col("__id"), col("__sh")).collect()
           java.util.Arrays.sort(rows,
@@ -2495,10 +2081,7 @@ object Dedup {
     // repartitioned like the MinHash tail (bytes are a bad proxy for
     // C(c,2) work under AQE coalescing). Gated on a long id column;
     // anything else keeps the join form.
-    val fusedOn = sys.props.get("graft.mh.fusedTail")
-      .orElse(sys.env.get("SPARK_GRAFT_MH_FUSED_TAIL"))
-      .getOrElse("on") != "off" &&
-      sets.schema("__id").dataType == org.apache.spark.sql.types.LongType
+    val fusedOn = ppFused(sets)
     val candidates = if (fusedOn) {
       val chunkPairs = 1L << 17
       val sz = size(col("__ps")).cast("long")
@@ -2654,10 +2237,7 @@ object Dedup {
     // and the B-side full postings are collected into ONE tagged list
     // and the A×B loop + filters run in an iterator, chunked by
     // striding the A index. Same arithmetic, same emitted pair set.
-    val fusedOn = sys.props.get("graft.mh.fusedTail")
-      .orElse(sys.env.get("SPARK_GRAFT_MH_FUSED_TAIL"))
-      .getOrElse("on") != "off" &&
-      sets.schema("__id").dataType == org.apache.spark.sql.types.LongType
+    val fusedOn = ppFused(sets)
     val candidates = if (fusedOn) {
       val chunkPairs = 1L << 17
       val tagged = prefixes.select(col("__g"), struct(lit(0).as("_1"),

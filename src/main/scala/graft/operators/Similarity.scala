@@ -761,7 +761,7 @@ object Similarity {
   }
 
   /** Measured probe-width calibration for [[ivfSearch]] — the IVF twin
-    * of the LSH discipline in [[Dedup.minHashDupPairsAuto]] (analytic
+    * of the LSH discipline in [[Dedup.LshPoint.GapCap]] (analytic
     * shape, MEASURED knob): instead of hand-setting `nprobe`, measure
     * on a deterministic sample exactly the quantity recall depends on —
     * the rank, in the query's centroid-distance order, of the cell each

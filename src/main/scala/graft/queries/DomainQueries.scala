@@ -470,14 +470,14 @@ object DomainQueries {
         try yrs.zipWithIndex.foreach { case (y, i) =>
           store.upsert(spec, pull.filter(year(col("od")) === y))
           if (i == crashAfterChunk)
-            throw new RuntimeException("injected crash: chunk committed, run not finished")
+            throw new graft.streaming.InjectedCrash("injected crash: chunk committed, run not finished")
         } finally pull.unpersist()
         n
       }
       runIngest(java.sql.Date.valueOf("1996-12-31"), -1) // run 1: initial window
       val crashed =
         try { runIngest(java.sql.Date.valueOf("2002-12-31"), 0); false }
-        catch { case _: RuntimeException => true }
+        catch { case _: graft.streaming.InjectedCrash => true }
       require(crashed, "e2e ingest: crash injection never fired")
       // recovery: REPLAN from the sink — the committed crash chunk has
       // moved the affected keys' watermarks, so the replay pulls

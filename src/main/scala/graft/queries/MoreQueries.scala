@@ -424,17 +424,12 @@ object MoreQueries {
                 if (!batch.isEmpty) store.upsert(spec, batch.toDF())
                 if (injectCrash && batchId == 0) {
                   injected = true
-                  throw new RuntimeException(
+                  throw new graft.streaming.InjectedCrash(
                     "injected crash: upsert landed, batch not committed")
                 }
             }.start()
-          if (injectCrash) {
-            // the crashed run terminates with our exception — swallow it
-            try q.processAllAvailable() catch { case _: Throwable => () }
-            try q.stop() catch { case _: Throwable => () }
-          } else {
-            try q.processAllAvailable() finally q.stop()
-          }
+          if (injectCrash) graft.streaming.InjectedCrash.drainCrashed(q)
+          else try q.processAllAvailable() finally q.stop()
         }
       run(injectCrash = true)
       require(injected, "crash injection never fired — recovery untested")

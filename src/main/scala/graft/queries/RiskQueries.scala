@@ -175,7 +175,7 @@ object RiskQueries {
       }
       if (injectCrash && !injected && batchId == 0) {
         injected = true
-        throw new RuntimeException(
+        throw new graft.streaming.InjectedCrash(
           "injected crash: fold committed, batch not committed")
       }
     }
@@ -187,12 +187,8 @@ object RiskQueries {
           .queryName(s"graft_stream_$tag")
           .option("checkpointLocation", ckptDir)
           .foreachBatch(fold _).start()
-        if (crashRun) {
-          try q.processAllAvailable() catch { case _: Throwable => () }
-          try q.stop() catch { case _: Throwable => () }
-        } else {
-          try q.processAllAvailable() finally q.stop()
-        }
+        if (crashRun) graft.streaming.InjectedCrash.drainCrashed(q)
+        else try q.processAllAvailable() finally q.stop()
       }
     if (injectCrash) {
       run(crashRun = true)

@@ -29,7 +29,7 @@ object TextQueries {
   private def minhashPairsShared(s: SparkSession, d: String): DataFrame = {
     pairsCache.evictIf((k, _) => k._1.sparkContext.isStopped)
     // r15: the shared pair set runs at the BUDGET-AWARE derived point
-    // (minHashDupPairsBudgeted — the r14 auto point plus a measured
+    // (LshPoint.Budgeted — the r14 auto point plus a measured
     // candidate-mass check on the band shape). The R=0.99-forced 2-row
     // banding the r14 default ran carries crushing intrinsic candidate
     // mass even where the mega-bucket cap is right (measured 22.7 M
@@ -42,8 +42,9 @@ object TextQueries {
     // budgeted point by default.
     pairsCache.getOrElseUpdate((s, d),
       graft.core.Scratch.materialize(
-        Dedup.minHashDupPairsBudgeted(Tables.documents(s, d), "doc_id", "text",
-          shingleLen = 5, jaccardThreshold = 0.4),
+        Dedup.minHashDupPairs(Tables.documents(s, d), "doc_id", "text",
+          shingleLen = 5, jaccardThreshold = 0.4,
+          Seq("auto" -> Dedup.LshPoint.Budgeted()))("auto"),
         "mh_pairs", d))
   }
 
@@ -147,7 +148,7 @@ object TextQueries {
       }
       if (injectCrash && !injected && batchId == 0) {
         injected = true
-        throw new RuntimeException(
+        throw new graft.streaming.InjectedCrash(
           "injected crash: fold committed, batch not committed")
       }
     }
@@ -159,12 +160,8 @@ object TextQueries {
           .queryName(s"graft_stream_$tag")
           .option("checkpointLocation", ckptDir)
           .foreachBatch(fold _).start()
-        if (crashRun) {
-          try q.processAllAvailable() catch { case _: Throwable => () }
-          try q.stop() catch { case _: Throwable => () }
-        } else {
-          try q.processAllAvailable() finally q.stop()
-        }
+        if (crashRun) graft.streaming.InjectedCrash.drainCrashed(q)
+        else try q.processAllAvailable() finally q.stop()
       }
     if (injectCrash) {
       run(crashRun = true)
@@ -412,16 +409,18 @@ object TextQueries {
     // walk, so the oracle checks the DECISION, not just the pipeline.
     "dd_minhash_budget_mid" -> ((s, d) =>
       graft.core.Scratch.materialize(
-        Dedup.minHashDupPairsBudgeted(Tables.documents(s, d), "doc_id", "text",
-          shingleLen = 5, jaccardThreshold = 0.4, budgetPairsPerRep = 128L),
+        Dedup.minHashDupPairs(Tables.documents(s, d), "doc_id", "text",
+          shingleLen = 5, jaccardThreshold = 0.4,
+          Seq("mid" -> Dedup.LshPoint.Budgeted(128L)))("mid"),
         "mh_pairs_mid", d)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy(col("id_a"), col("id_b"))),
 
     "dd_minhash_budget_floor" -> ((s, d) =>
       graft.core.Scratch.materialize(
-        Dedup.minHashDupPairsBudgeted(Tables.documents(s, d), "doc_id", "text",
-          shingleLen = 5, jaccardThreshold = 0.4, budgetPairsPerRep = 8L),
+        Dedup.minHashDupPairs(Tables.documents(s, d), "doc_id", "text",
+          shingleLen = 5, jaccardThreshold = 0.4,
+          Seq("floor" -> Dedup.LshPoint.Budgeted(8L)))("floor"),
         "mh_pairs_floor", d)
         .withColumn("jaccard", round(col("jaccard"), 6))
         .orderBy(col("id_a"), col("id_b"))),
@@ -483,7 +482,7 @@ object TextQueries {
       // point, which lands on r=3 × 46 bands wherever the R=0.99 shape's
       // measured candidate mass blows the 64-pairs/rep budget — every
       // driver SF does). The comparison points ride ONE shared
-      // identity-collapse + signature pass (minHashDupPairsMulti slices
+      // identity-collapse + signature pass (minHashDupPairs slices
       // the widest signature's prefixes) instead of replaying the
       // corpus per setting:
       //   legacy_16x4 — the pre-r14 hand-set default (recall 0.6055 at
@@ -491,13 +490,13 @@ object TextQueries {
       //   p99_r2xN — the r14 analytic R=0.99 shape the budget walk now
       //     REJECTS on this corpus: its recall rides next to the budget
       //     point's so the explicit recall-for-cost trade stays measured.
-      val (lr99, lb99) = Dedup.lshAutoShape(0.4, 0.99, 64)
-      val cmp = Dedup.minHashDupPairsMulti(
+      val (lr99, lb99) = Dedup.lshAutoShape(0.4, Dedup.TargetRecall, Dedup.MaxBands)
+      val cmp = Dedup.minHashDupPairs(
         Tables.documents(s, d), "doc_id", "text",
         shingleLen = 5, jaccardThreshold = 0.4,
-        Seq(("legacy_16x4", 16, 4, Left(100)),
-          ("tuned", 64, 32, Left(1000)),
-          (s"p99_r${lr99}x$lb99", lr99 * lb99, lb99, Right((16, 1.5)))))
+        Seq("legacy_16x4" -> Dedup.LshPoint.FixedCap(16, 4, 100),
+          "tuned" -> Dedup.LshPoint.FixedCap(64, 32, 1000),
+          s"p99_r${lr99}x$lb99" -> Dedup.LshPoint.GapCap(lr99 * lb99, lb99)))
       val legacyPairs = graft.core.Scratch.materialize(
         cmp("legacy_16x4"), "mh_pairs_legacy", d)
       val tunedPairs = graft.core.Scratch.materialize(
@@ -656,7 +655,7 @@ object TextQueries {
     // pairs(B) ∪ cross(A,B) EXACTLY, because band-bucket membership is
     // a per-document property — which is what makes incremental ≡
     // from-scratch provable instead of approximate. The measured cap
-    // (minHashDupPairsAuto) is corpus-dependent, so decompositions
+    // (LshPoint.GapCap) is corpus-dependent, so decompositions
     // would diverge exactly at cap boundaries; a deployment re-enables
     // it per batch and accepts that bounded divergence.
     //
@@ -669,24 +668,13 @@ object TextQueries {
     // permanent dedup hole.
     "e2e_corpus_curation" -> ((s, d) => {
       import graft.core.{TableSpec, TableStore}
-      // dev-only phase timing, same switch as Dedup's
-      val tOn = sys.env.get("SPARK_GRAFT_DEDUP_TIMING").contains("1")
-      def tt[T](label: String)(f: => T): T =
-        if (!tOn) f
-        else {
-          val t0 = System.nanoTime()
-          val r = f
-          System.err.println(
-            f"[e2e-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          r
-        }
       val dir = graft.core.Scratch.queryDir("e2e_curation")
       val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
       val store = new TableStore(s, dir)
       val docSpec = TableSpec("curated_docs", Seq("doc_id"))
       val pairSpec = TableSpec("dup_pairs", Seq("id_a", "id_b"))
-      val (lr, lb) = Dedup.lshAutoShape(0.4, 0.99, 64)
+      val (lr, lb) = Dedup.lshAutoShape(0.4, Dedup.TargetRecall, Dedup.MaxBands)
 
       // S-stage, ONCE per query (r16): canonical-URL dedup
       // (first-fetch-wins) then the crawl frontier — one row per doc
@@ -697,17 +685,17 @@ object TextQueries {
       // and the three drops (run1, crash, recovery) were each
       // re-running the full canonicalize+group chain on their slice.
       // One ledger snapshot, one frontier, three slices.
-      val frontier = tt("frontier build")(graft.core.Scratch.materialize(
+      val frontier = graft.core.Scratch.materialize(
         graft.operators.UrlOps
           .dedupByCanonicalUrl(Tables.scatter(urlLedger(s, d)), "url", "cid")
           .select(pmod(col("keep_id"), lit(1000000L)).as("doc_id"), col("n_urls"))
           .groupBy("doc_id").agg(sum("n_urls").as("n_urls")),
-        "e2e_cur_frontier", d))
+        "e2e_cur_frontier", d)
 
       // One crawl drop = the frontier slice whose docs belong to `pred`.
       // Returns the number of docs actually fetched (post anti-join).
       def runDrop(tag: String, pred: org.apache.spark.sql.Column,
-          crashBetweenChunk: Int): Long = tt(s"drop $tag") {
+          crashBetweenChunk: Int): Long = {
         val perDoc = frontier.filter(pred === pmod(col("doc_id"), lit(2)))
         // J4: docs already in the sink are not re-fetched — the
         // idempotence the recovery run rides
@@ -723,12 +711,11 @@ object TextQueries {
         // equals the frontier count — every frontier doc_id is a
         // documents PK by construction (ids are pmod(cid, 1e6) of cids
         // minted from doc_ids).
-        val batch0 = tt(s"drop $tag: fetch batch write")(
-          graft.core.Scratch.materialize(
-            newDocs.join(
-              Tables.documents(s, d).select(col("doc_id"), col("source"), col("text")),
-              Seq("doc_id")),
-            s"e2e_cur_b0_$tag", d))
+        val batch0 = graft.core.Scratch.materialize(
+          newDocs.join(
+            Tables.documents(s, d).select(col("doc_id"), col("source"), col("text")),
+            Seq("doc_id")),
+          s"e2e_cur_b0_$tag", d)
         val n = batch0.count()
         // quality gate (Gopher repetition rule) rides as a STORED flag:
         // rejected docs are remembered, so recovery never re-fetches
@@ -741,8 +728,7 @@ object TextQueries {
         // and PERSISTED with the row — every later drop reads them as
         // its index side instead of re-hashing previously ingested
         // text (the incremental-index shape minHashSigTable documents)
-        val batch = tt(s"drop $tag: batch score+sig write")(
-          graft.core.Scratch.materialize(
+        val batch = graft.core.Scratch.materialize(
           batch0.join(gate, Seq("doc_id"))
             .withColumn("__toks", tokens(col("text")))
             .withColumn("__ltoks", tokens(lower(col("text"))))
@@ -752,7 +738,7 @@ object TextQueries {
               tokenCountOf(col("__toks")).cast("long").as("n_tokens"),
               col("keep"), col("__c._1").as("minhash_sig"),
               col("__c._2").as("shingles")),
-          s"e2e_cur_batch_$tag", d))
+          s"e2e_cur_batch_$tag", d)
         // Near-dup pairs for the WHOLE drop, committed BEFORE any doc
         // chunk: within-drop pairs + drop-vs-index pairs cover exactly
         // the pairs this drop adds, and committing them first means a
@@ -776,19 +762,17 @@ object TextQueries {
         // the upsert reads the cache instead of recomputing the pair
         // pipeline for the partitions isEmpty never touched
         val pairs = within.unionByName(cross).persist()
-        val nPairs = tt(s"drop $tag: pairs compute")(pairs.count())
-        tt(s"drop $tag: pairs upsert")(
-          if (nPairs > 0) store.upsert(pairSpec, pairs))
+        val nPairs = pairs.count()
+        if (nPairs > 0) store.upsert(pairSpec, pairs)
         pairs.unpersist()
         // the reference's bunch-insert batching: docs commit in chunks
         // so a crash preserves partial progress
         // chunk on doc_id div 2 so BOTH parity drops split non-trivially
         (0 until 2).foreach { i =>
           val chunk = batch.filter(pmod(expr("doc_id div 2"), lit(2)) === i)
-          tt(s"drop $tag: doc chunk $i upsert")(
-            if (!chunk.isEmpty) store.upsert(docSpec, chunk))
+          if (!chunk.isEmpty) store.upsert(docSpec, chunk)
           if (i == crashBetweenChunk)
-            throw new RuntimeException(
+            throw new graft.streaming.InjectedCrash(
               "injected crash: drop pairs + first doc chunk committed, rest lost")
         }
         n
@@ -797,7 +781,7 @@ object TextQueries {
       runDrop("run1", lit(0), -1) // drop 1: even docs, clean run
       val crashed =
         try { runDrop("crash", lit(1), 0); false }
-        catch { case _: RuntimeException => true }
+        catch { case _: graft.streaming.InjectedCrash => true }
       require(crashed, "e2e curation: crash injection never fired")
       // what the torn state actually committed (drop 2 = the odd docs);
       // the recovery assertion is exact arithmetic against it rather
@@ -1089,7 +1073,7 @@ object TextQueries {
     * (doc_id, text) — the e2e curation oracle runs the pipeline over
     * its GATE-surviving subset instead of the whole corpus. */
   private def minhashBaseCtesFrom(src: String) =
-    // Identity collapse replay (r13, Dedup.minHashPairsCore): one
+    // Identity collapse replay (r13, Dedup.minHashDupPairs): one
     // representative (min doc_id) per distinct normalized text; the
     // whole pipeline runs in rep space (`sh`/`hs` are per-REP), member
     // pairs fan out at emission — `spr` carries the same-text
@@ -1116,7 +1100,7 @@ object TextQueries {
     * exact twin of the engine's Mersenne-folded kernel
     * (Dedup.minHashSignature; component k depends only on k, so a
     * numHashes-component signature IS sig[1:numHashes] of this one —
-    * the same prefix-slicing Dedup.minHashDupPairsBudgeted's shared
+    * the same prefix-slicing Dedup.minHashDupPairs's shared
     * collapse pass exploits). Two cost properties are load-bearing for
     * the driver's gate wall time (DuckDB 1.0):
     *
@@ -1210,11 +1194,11 @@ object TextQueries {
           |gap$p AS (SELECT n, lead(n) OVER (ORDER BY n) AS nx FROM ds$p),
           |cap$p AS (SELECT COALESCE(
           |    (SELECT n FROM (SELECT n, CAST(nx AS DOUBLE) / n AS r FROM gap$p
-          |       WHERE n >= 16 AND nx IS NOT NULL
+          |       WHERE n >= ${graft.operators.Dedup.MinOutlierBucket} AND nx IS NOT NULL
           |       ORDER BY r DESC, n DESC LIMIT 1) g
-          |     WHERE g.r >= 1.5),
+          |     WHERE g.r >= ${graft.operators.Dedup.OutlierGapRatio}),
           |    (SELECT n FROM (SELECT n, nx - n AS ag FROM gap$p
-          |       WHERE n >= 16 AND nx IS NOT NULL
+          |       WHERE n >= ${graft.operators.Dedup.MinOutlierBucket} AND nx IS NOT NULL
           |       ORDER BY ag DESC, n DESC LIMIT 1) a),
           |    (SELECT max(n) FROM ds$p)) AS cap),
           |""".stripMargin
@@ -1268,7 +1252,7 @@ object TextQueries {
   /** The DEFAULT pipeline with unprefixed CTE names, ending in `prs` —
     * used by the pair oracle and the connected-components oracles.
     * r15: the default is the BUDGET-AWARE derived operating point
-    * (Dedup.minHashDupPairsBudgeted), all THREE tiers replayed: both
+    * (Dedup.LshPoint.Budgeted), all THREE tiers replayed: both
     * ladder shapes' pipelines are built (R=0.99 → `_p99`, R=0.95 →
     * `_p95`, each with its measured histogram cap) plus the tail shape
     * under the tier-3 BUDGET-derived cap (`_p95b` — the hard bound);
@@ -1287,7 +1271,7 @@ object TextQueries {
     * asymmetric ingest replay — two-sided identity collapse, index-side
     * banding under the full three-branch gap rule (ratio knee ≥ 1.5 →
     * absolute-gap knee → max) REFINED by the measured per-batch budget
-    * walk (engine: `minHashAgainstIndexCore`'s `budgetCapFromMassHist`
+    * walk (engine: `minHashDupAgainstIndexAuto`'s `budgetCapFromMassHist`
     * over the (index bucket size, batch band hits) histogram — mass
     * n·m, the asymmetric analogue of the self-join's C(n,2)·m), est
     * prefilter and join-based exact verify on the shared
@@ -1295,7 +1279,8 @@ object TextQueries {
     * retires this oracle's leftover Kirsch–Mitzenmacher replay, which
     * matched the engine only value-level at gate SFs). */
   private def incrementalIndexOracle(budget: Long): String = {
-    val (idxR, idxB) = graft.operators.Dedup.lshAutoShape(0.4, 0.99, 64)
+    val (idxR, idxB) = graft.operators.Dedup.lshAutoShape(0.4,
+      graft.operators.Dedup.TargetRecall, graft.operators.Dedup.MaxBands)
     val idxH = idxR * idxB
     s"""WITH inp AS (
        |  SELECT doc_id, text FROM documents
@@ -1334,11 +1319,11 @@ object TextQueries {
        |gapi AS (SELECT n, lead(n) OVER (ORDER BY n) AS nx FROM dsi),
        |capi AS (SELECT COALESCE(
        |    (SELECT n FROM (SELECT n, CAST(nx AS DOUBLE) / n AS r FROM gapi
-       |       WHERE n >= 16 AND nx IS NOT NULL
+       |       WHERE n >= ${graft.operators.Dedup.MinOutlierBucket} AND nx IS NOT NULL
        |       ORDER BY r DESC, n DESC LIMIT 1) g
-       |     WHERE g.r >= 1.5),
+       |     WHERE g.r >= ${graft.operators.Dedup.OutlierGapRatio}),
        |    (SELECT n FROM (SELECT n, nx - n AS ag FROM gapi
-       |       WHERE n >= 16 AND nx IS NOT NULL
+       |       WHERE n >= ${graft.operators.Dedup.MinOutlierBucket} AND nx IS NOT NULL
        |       ORDER BY ag DESC, n DESC LIMIT 1) a),
        |    (SELECT max(n) FROM dsi)) AS cap),
        |bn AS (SELECT band, bh, n FROM bszi WHERE n <= (SELECT cap FROM capi)),
@@ -1383,12 +1368,13 @@ object TextQueries {
   }
 
   private def minhashPairCtesAt(bud: Long) = {
-    val (r99, b99) = graft.operators.Dedup.lshAutoShape(0.4, 0.99, 64)
-    val (r95, b95) = graft.operators.Dedup.lshAutoShape(0.4, 0.95, 64)
+    // the ladder walk replayed as two tiers plus the budget cap
+    val Seq((r99, b99), (r95, b95)) = graft.operators.Dedup.RecallLadder
+      .map(graft.operators.Dedup.lshAutoShape(0.4, _, graft.operators.Dedup.MaxBands))
     // the shared signature table carries the WIDEST shape's components;
     // every setting (including recall-report's 16/64-hash extras) is a
     // prefix slice of it — max over the ladder, exactly like the
-    // engine's maxHashes in minHashDupPairsBudgeted
+    // engine's LshPoint.Budgeted width
     val maxH = math.max(r99 * b99, r95 * b95)
     s"""$minhashBaseCtes,
        |${minhashSigCtes(maxH)},
@@ -1828,7 +1814,8 @@ object TextQueries {
     // brute-force 5-gram τ=0.4 ground truth, membership-intersected
     // per setting.
     "dd_lsh_recall_report" -> {
-      val (lr99, lb99) = graft.operators.Dedup.lshAutoShape(0.4, 0.99, 64)
+      val (lr99, lb99) = graft.operators.Dedup.lshAutoShape(0.4,
+        graft.operators.Dedup.TargetRecall, graft.operators.Dedup.MaxBands)
       s"""WITH $minhashPairCtes,
          |${minhashSettingCtes("_ba", numHashes = 16, bands = 4, maxBucket = 100)},
          |${minhashSettingCtes("_tu", numHashes = 64, bands = 32, maxBucket = 1000)},
@@ -1974,7 +1961,8 @@ object TextQueries {
     // identity collapse, min-id-wins suppression, the 3/5-token budget
     // cut (histogram semantics), and the snake token shards.
     "e2e_corpus_curation" -> {
-      val (lr, lb) = graft.operators.Dedup.lshAutoShape(0.4, 0.99, 64)
+      val (lr, lb) = graft.operators.Dedup.lshAutoShape(0.4,
+        graft.operators.Dedup.TargetRecall, graft.operators.Dedup.MaxBands)
       s"""WITH $urlCanonCtes,
          |ledg AS (SELECT canonical_url, CAST(min(cid) AS BIGINT) AS keep_id,
          |    CAST(count(*) AS BIGINT) AS n_urls FROM c GROUP BY 1),

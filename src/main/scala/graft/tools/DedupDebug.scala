@@ -42,7 +42,8 @@ object DedupDebug {
     t("candidates")(println("cand=" + cand.count()))
     t("dedup cand")(println("cand distinct=" + cand.dropDuplicates("id_a", "id_b").count()))
     t("full pipeline")(println("pairs=" +
-      Dedup.minHashDupPairs(docs, "doc_id", "text", 5, 16, 4, 0.4).count()))
+      Dedup.minHashDupPairs(docs, "doc_id", "text", 5, 0.4,
+        Seq("p" -> Dedup.LshPoint.FixedCap(16, 4, 100)))("p").count()))
     spark.stop()
   }
 }

@@ -25,9 +25,9 @@ object FusedTailProbe {
     import graft.operators.Dedup
     val docs = graft.core.Tables.documents(spark, dir)
     val t0 = System.nanoTime()
-    Dedup.minHashDupPairsMulti(docs, "doc_id", "text",
+    Dedup.minHashDupPairs(docs, "doc_id", "text",
       shingleLen = 5, jaccardThreshold = 0.4,
-      Seq(("tuned", 64, 32, Left(1000)))).values.foreach(_.count())
+      Seq("tuned" -> Dedup.LshPoint.FixedCap(64, 32, 1000))).values.foreach(_.count())
     println(f"[fused-probe] coalesce=$coalesce tuned: ${(System.nanoTime() - t0) / 1e9}%.1f s")
     spark.stop()
   }

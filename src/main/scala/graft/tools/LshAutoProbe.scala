@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Diagnostic main for the auto LSH operating point
-  * ([[graft.operators.Dedup.minHashDupPairsAuto]]): prints the derived
+  * ([[graft.operators.Dedup.LshPoint.GapCap]]): prints the derived
   * (rows, bands), the data-derived cap's effect, and measured
   * recall/precision vs the exact PPJoin threshold join at each SF dir
   * given on the command line.
@@ -33,8 +33,9 @@ object LshAutoProbe {
       println(f"[probe] $d exact=$nExact exact_s=${(t1 - t0) / 1e9}%.2f")
       // the budget-aware DEFAULT (r15): recall audit + cost
       val t3 = System.nanoTime()
-      val budgeted = graft.operators.Dedup.minHashDupPairsBudgeted(
-        docs, "doc_id", "text", shingleLen = 5, jaccardThreshold = 0.4)
+      val budgeted = graft.operators.Dedup.minHashDupPairs(
+        docs, "doc_id", "text", shingleLen = 5, jaccardThreshold = 0.4,
+        Seq("b" -> graft.operators.Dedup.LshPoint.Budgeted()))("b")
       val nBud = budgeted.count()
       val t4 = System.nanoTime()
       val nBudHit = exact.join(budgeted, Seq("id_a", "id_b"), "left_semi").count()
@@ -49,8 +50,9 @@ object LshAutoProbe {
       // sf1-mutated) — do not run it there by accident
       if (sys.env.get("SPARK_GRAFT_PROBE_AUTO").contains("1")) {
         val t5 = System.nanoTime()
-        val auto = graft.operators.Dedup.minHashDupPairsAuto(
-          docs, "doc_id", "text", shingleLen = 5, jaccardThreshold = 0.4)
+        val auto = graft.operators.Dedup.minHashDupPairs(
+          docs, "doc_id", "text", shingleLen = 5, jaccardThreshold = 0.4,
+          Seq("a" -> graft.operators.Dedup.LshPoint.GapCap(r * b, b)))("a")
         val nAuto = auto.count()
         val t6 = System.nanoTime()
         val nHit = exact.join(auto, Seq("id_a", "id_b"), "left_semi").count()

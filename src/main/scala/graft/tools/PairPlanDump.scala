@@ -38,8 +38,9 @@ object PairPlanDump {
       }
     }
     dump("mh_budgeted_pipeline",
-      graft.operators.Dedup.minHashDupPairsBudgeted(docs, "doc_id", "text",
-        shingleLen = 5, jaccardThreshold = 0.4))
+      graft.operators.Dedup.minHashDupPairs(docs, "doc_id", "text",
+        shingleLen = 5, jaccardThreshold = 0.4,
+        Seq("b" -> graft.operators.Dedup.LshPoint.Budgeted()))("b"))
     val base = docs.select(org.apache.spark.sql.functions.col("doc_id"),
       org.apache.spark.sql.functions.col("text"))
     val batch = docs

@@ -33,16 +33,17 @@ object RecallReportProfile {
         "doc_id", "text", shingleLen = 5, tau = 0.4).count()
     }
     timed("budgeted default (shared auto row)") {
-      Dedup.minHashDupPairsBudgeted(docs, "doc_id", "text",
-        shingleLen = 5, jaccardThreshold = 0.4).count()
+      Dedup.minHashDupPairs(docs, "doc_id", "text",
+        shingleLen = 5, jaccardThreshold = 0.4,
+        Seq("b" -> Dedup.LshPoint.Budgeted()))("b").count()
     }
     val (lr99, lb99) = Dedup.lshAutoShape(0.4, 0.99, 64)
     timed("3 comparison points (multi, shared sig pass)") {
-      Dedup.minHashDupPairsMulti(docs, "doc_id", "text",
+      Dedup.minHashDupPairs(docs, "doc_id", "text",
         shingleLen = 5, jaccardThreshold = 0.4,
-        Seq(("legacy_16x4", 16, 4, Left(100)),
-          ("tuned", 64, 32, Left(1000)),
-          (s"p99_r${lr99}x$lb99", lr99 * lb99, lb99, Right((16, 1.5)))))
+        Seq("legacy_16x4" -> Dedup.LshPoint.FixedCap(16, 4, 100),
+          "tuned" -> Dedup.LshPoint.FixedCap(64, 32, 1000),
+          s"p99_r${lr99}x$lb99" -> Dedup.LshPoint.GapCap(lr99 * lb99, lb99)))
         .values.foreach(_.count())
     }
     spark.stop()
@@ -64,14 +65,13 @@ object RecallPointProfile {
     import graft.operators.Dedup
     val docs = graft.core.Tables.documents(spark, dir)
     val (lr99, lb99) = Dedup.lshAutoShape(0.4, 0.99, 64)
-    for ((label, nh, b, cap) <- Seq(
-        ("legacy_16x4", 16, 4, Left(100): Either[Int, (Int, Double)]),
-        ("tuned", 64, 32, Left(1000): Either[Int, (Int, Double)]),
-        (s"p99_r${lr99}x$lb99", lr99 * lb99, lb99,
-          Right((16, 1.5)): Either[Int, (Int, Double)]))) {
+    for ((label, point) <- Seq(
+        "legacy_16x4" -> Dedup.LshPoint.FixedCap(16, 4, 100),
+        "tuned" -> Dedup.LshPoint.FixedCap(64, 32, 1000),
+        s"p99_r${lr99}x$lb99" -> Dedup.LshPoint.GapCap(lr99 * lb99, lb99))) {
       val t0 = System.nanoTime()
-      Dedup.minHashDupPairsMulti(docs, "doc_id", "text", 5, 0.4,
-        Seq((label, nh, b, cap))).values.foreach(_.count())
+      Dedup.minHashDupPairs(docs, "doc_id", "text", 5, 0.4,
+        Seq(label -> point)).values.foreach(_.count())
       println(f"[point-profile] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     spark.stop()

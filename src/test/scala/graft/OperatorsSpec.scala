@@ -120,7 +120,8 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
         (i, s"zq${i}a xv${i}b mn${i}c pq${i}d rs${i}e tu${i}f wy${i}g kh${i}j")))
       .toDF("doc_id", "text")
     val pairs = Dedup.minHashDupPairs(docs, "doc_id", "text",
-      shingleLen = 4, numHashes = 16, bands = 8, jaccardThreshold = 0.5)
+      shingleLen = 4, jaccardThreshold = 0.5,
+      Seq("p" -> Dedup.LshPoint.FixedCap(16, 8, 100)))("p")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.contains((1L, 2L)))
     assert(pairs.length < 10) // and not everything pairs with everything
@@ -140,8 +141,8 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
         (i, s"zq${i}a xv${i}b mn${i}c pq${i}d rs${i}e tu${i}f wy${i}g kh${i}j")))
       .toDF("doc_id", "text")
     val pairs = Dedup.minHashDupPairs(docs, "doc_id", "text",
-        shingleLen = 4, numHashes = 16, bands = 8, jaccardThreshold = 0.5,
-        maxBucketSize = 5)
+        shingleLen = 4, jaccardThreshold = 0.5,
+        Seq("p" -> Dedup.LshPoint.FixedCap(16, 8, 5)))("p")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     val within = pairs.filter { case (a, b, _) => a <= 30 && b <= 30 }
     assert(within.length == 30 * 29 / 2,
@@ -179,14 +180,16 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
       (3L to 40L).map(i =>
         (i, s"zq${i}a xv${i}b mn${i}c pq${i}d rs${i}e tu${i}f wy${i}g kh${i}j")))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minHashDupPairsAuto(docs, "doc_id", "text",
-      shingleLen = 4, jaccardThreshold = 0.5)
+    val (r, b) = Dedup.lshAutoShape(0.5, Dedup.TargetRecall, Dedup.MaxBands)
+    val pairs = Dedup.minHashDupPairs(docs, "doc_id", "text",
+      shingleLen = 4, jaccardThreshold = 0.5,
+      Seq("auto" -> Dedup.LshPoint.GapCap(r * b, b)))("auto")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.contains((1L, 2L)))
     assert(pairs.length < 10)
   }
 
-  test("minHashDupPairsMulti: each setting equals its standalone pipeline") {
+  test("minHashDupPairs: each point equals its standalone pipeline") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
     val nearDup = base.replace("tonight", "today")
@@ -198,29 +201,31 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         math.rint(r.getDouble(2) * 1e6))).toSet
     // one shared collapse + 64-wide signature pass, two prefix settings
-    val multi = Dedup.minHashDupPairsMulti(docs, "doc_id", "text",
+    val multi = Dedup.minHashDupPairs(docs, "doc_id", "text",
       shingleLen = 4, jaccardThreshold = 0.5,
-      Seq(("a", 16, 8, Left(100)), ("b", 64, 32, Left(1000))))
-    // the Kirsch–Mitzenmacher prefix property makes each setting
-    // bit-identical to a standalone pipeline computed at its own width
+      Seq("a" -> Dedup.LshPoint.FixedCap(16, 8, 100),
+        "b" -> Dedup.LshPoint.FixedCap(64, 32, 1000)))
+    // the prefix property makes each point bit-identical to a
+    // standalone pipeline computed at its own width
     val directA = Dedup.minHashDupPairs(docs, "doc_id", "text",
-      shingleLen = 4, numHashes = 16, bands = 8, jaccardThreshold = 0.5,
-      maxBucketSize = 100)
+      shingleLen = 4, jaccardThreshold = 0.5,
+      Seq("a" -> Dedup.LshPoint.FixedCap(16, 8, 100)))("a")
     val directB = Dedup.minHashDupPairs(docs, "doc_id", "text",
-      shingleLen = 4, numHashes = 64, bands = 32, jaccardThreshold = 0.5,
-      maxBucketSize = 1000)
+      shingleLen = 4, jaccardThreshold = 0.5,
+      Seq("b" -> Dedup.LshPoint.FixedCap(64, 32, 1000)))("b")
     assert(rows(multi("a")) == rows(directA))
     assert(rows(multi("b")) == rows(directB))
     assert(rows(multi("b")).contains((1L, 2L, rows(directB).find(t => t._1 == 1L && t._2 == 2L).get._3)))
   }
 
-  test("minHashDupPairsMulti: duplicate labels fail loudly") {
+  test("minHashDupPairs: duplicate labels fail loudly") {
     import spark.implicits._
     val docs = Seq((1L, "alpha beta gamma")).toDF("doc_id", "text")
     intercept[IllegalArgumentException] {
-      Dedup.minHashDupPairsMulti(docs, "doc_id", "text",
+      Dedup.minHashDupPairs(docs, "doc_id", "text",
         shingleLen = 4, jaccardThreshold = 0.5,
-        Seq(("a", 16, 8, Left(100)), ("a", 64, 32, Left(1000))))
+        Seq("a" -> Dedup.LshPoint.FixedCap(16, 8, 100),
+          "a" -> Dedup.LshPoint.FixedCap(64, 32, 1000)))
     }
   }
 
@@ -236,29 +241,30 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         math.rint(r.getDouble(2) * 1e6))).toSet
     // a generous budget keeps the R=0.99 head shape — bit-identical to
-    // the plain auto pipeline
-    val head = Dedup.minHashDupPairsBudgeted(docs, "doc_id", "text",
+    // the plain auto (gap-cap) pipeline
+    val (r, b) = Dedup.lshAutoShape(0.5, Dedup.TargetRecall, Dedup.MaxBands)
+    val head = Dedup.minHashDupPairs(docs, "doc_id", "text",
       shingleLen = 4, jaccardThreshold = 0.5,
-      budgetPairsPerRep = 1000000L)
-    assert(rows(head) == rows(Dedup.minHashDupPairsAuto(docs, "doc_id", "text",
-      shingleLen = 4, jaccardThreshold = 0.5)))
+      Seq("head" -> Dedup.LshPoint.Budgeted(1000000L)))("head")
+    assert(rows(head) == rows(Dedup.minHashDupPairs(docs, "doc_id", "text",
+      shingleLen = 4, jaccardThreshold = 0.5,
+      Seq("auto" -> Dedup.LshPoint.GapCap(r * b, b)))("auto")))
     // a zero budget exhausts the ladder AND the tier-3 budget cap
     // collapses to 1: no bucket may pair, only identity-collapse
     // same-text pairs survive — the HARD mass bound at its floor
     val docsWithCopy = docs.unionByName(
       Seq((3L, base)).toDF("doc_id", "text"))
-    val floor = Dedup.minHashDupPairsBudgeted(docsWithCopy, "doc_id", "text",
-      shingleLen = 4, jaccardThreshold = 0.5, budgetPairsPerRep = 0L)
+    val floor = Dedup.minHashDupPairs(docsWithCopy, "doc_id", "text",
+      shingleLen = 4, jaccardThreshold = 0.5,
+      Seq("floor" -> Dedup.LshPoint.Budgeted(0L)))("floor")
     assert(rows(floor) == Set((1L, 3L, 1e6)),
       s"zero budget must keep identity pairs only, got ${rows(floor)}")
     // tier-2 (ladder-tail within budget) decision coverage lives in the
     // oracled dd_minhash_budget_mid query — a unit corpus cannot
     // separate the shapes' masses robustly
-    // ladder must be highest-recall first
-    intercept[IllegalArgumentException] {
-      Dedup.minHashDupPairsBudgeted(docs, "doc_id", "text",
-        shingleLen = 4, jaccardThreshold = 0.5, recallLadder = Seq(0.95, 0.99))
-    }
+    // the ladder must be highest-recall first: the walk accepts the
+    // FIRST shape within budget
+    assert(Dedup.RecallLadder == Dedup.RecallLadder.sorted.reverse)
   }
 
   test("fused bucket tail is bit-identical to the classic staged tail") {
@@ -280,15 +286,11 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1),
         java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
-    val fused = rows(Dedup.minHashDupPairs(docs, "doc_id", "text",
-      shingleLen = 3, numHashes = 16, bands = 8, jaccardThreshold = 0.35,
-      maxBucketSize = 50))
-    val classic = try {
-      sys.props("graft.mh.fusedTail") = "off"
-      rows(Dedup.minHashDupPairs(docs, "doc_id", "text",
-        shingleLen = 3, numHashes = 16, bands = 8, jaccardThreshold = 0.35,
-        maxBucketSize = 50))
-    } finally sys.props.remove("graft.mh.fusedTail")
+    def pairs(lookups: Boolean) = rows(Dedup.dupPairs(docs, "doc_id", "text",
+      shingleLen = 3, jaccardThreshold = 0.35,
+      Seq("p" -> Dedup.LshPoint.FixedCap(16, 8, 50)), lookups)("p"))
+    val fused = pairs(lookups = true)
+    val classic = pairs(lookups = false)
     assert(fused.nonEmpty && fused == classic,
       s"fused=${fused.size} classic=${classic.size} " +
         s"diff=${(fused diff classic) ++ (classic diff fused)}")
@@ -317,10 +319,10 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
       val fusedJ = rows(Dedup.prefixFilterPairs(docs, "doc_id", "text", 2, tau))
       val fusedC = rows(Dedup.containmentPairs(docs, "doc_id", "text", 2, tau))
       val (classicJ, classicC) = try {
-        sys.props("graft.mh.fusedTail") = "off"
+        sys.props("graft.ppjoin.fused") = "off"
         (rows(Dedup.prefixFilterPairs(docs, "doc_id", "text", 2, tau)),
           rows(Dedup.containmentPairs(docs, "doc_id", "text", 2, tau)))
-      } finally sys.props.remove("graft.mh.fusedTail")
+      } finally sys.props.remove("graft.ppjoin.fused")
       assert(fusedJ.nonEmpty && fusedJ == classicJ,
         s"tau=$tau jaccard diff=${(fusedJ diff classicJ) ++ (classicJ diff fusedJ)}")
       assert(fusedC.nonEmpty && fusedC == classicC,
@@ -335,13 +337,13 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
         (0 until n).map(i => (0, s"bucket$b", i))
       }.toDF("band", "band_hash", "member").select(col("band"), col("band_hash"))
     // 30 -> 100 is a 3.3x qualified knee: cut there
-    assert(Dedup.autoBucketCap(banded((16 to 30) :+ 100), 16, 1.5) == 30)
+    assert(Dedup.autoBucketCap(banded((16 to 30) :+ 100)) == 30)
     // dense 16..40: no ratio reaches 1.5; the r14 interim rule would cut
     // at the SMALLEST size (max ratio 17/16) — the fallback cuts at the
     // largest absolute gap instead (all gaps 1, ties -> larger n = 39)
-    assert(Dedup.autoBucketCap(banded(16 to 40), 16, 1.5) == 39)
+    assert(Dedup.autoBucketCap(banded(16 to 40)) == 39)
     // no gap rows at all (every size < minOutlierBucket): keep everything
-    assert(Dedup.autoBucketCap(banded(Seq(2, 3, 5)), 16, 1.5) == 5)
+    assert(Dedup.autoBucketCap(banded(Seq(2, 3, 5))) == 5)
   }
 
   test("minHashPairsBetweenSigs: an id on both sides stays well-defined") {
@@ -395,6 +397,68 @@ class OperatorsSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.contains((100L, 1L)))
     assert(!got.exists(_._1 == 101L))
+  }
+
+  test("sig-table tails: lookup path is bit-identical to the forced staged path") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight to sleep"
+    val words = base.split(" ")
+    val mutated = (0 until 8).map { k =>
+      words.zipWithIndex.map { case (w, i) =>
+        if (i % 8 < k) s"mut$k$i" else w }.mkString(" ")
+    }
+    val docs = ((1L to 3L).map(i => (i, base)) ++
+      mutated.zipWithIndex.map { case (t, k) => (10L + k, t) } ++
+      (30L to 50L).map(i =>
+        (i, s"zq${i}a xv${i}b mn${i}c pq${i}d rs${i}e tu${i}f wy${i}g kh${i}j")))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSet
+    val sigs = Dedup.minHashSigTable(docs, "doc_id", "text", 3, 16)
+    // ids 10..13 sit on BOTH sides (same text), so the between tail also
+    // drops equal-id candidates and folds both orientations
+    val idx = sigs.filter($"doc_id" < 14)
+    val batch = sigs.filter($"doc_id" >= 10)
+    def within(lookups: Boolean) =
+      rows(Dedup.sigPairs(sigs, None, "doc_id", 16, 8, 0.35, lookups))
+    def between(lookups: Boolean) =
+      rows(Dedup.sigPairs(batch, Some(idx), "doc_id", 16, 8, 0.35, lookups))
+    val (wl, ws) = (within(lookups = true), within(lookups = false))
+    assert(wl.nonEmpty && wl == ws, s"within diff=${(wl diff ws) ++ (ws diff wl)}")
+    val (bl, bs) = (between(lookups = true), between(lookups = false))
+    assert(bl.nonEmpty && bl == bs, s"between diff=${(bl diff bs) ++ (bs diff bl)}")
+    // the public entry points take the lookup path
+    assert(rows(Dedup.minHashPairsWithinSigs(sigs, "doc_id", 16, 8, 0.35)) == wl)
+    assert(rows(Dedup.minHashPairsBetweenSigs(batch, idx, "doc_id", 16, 8, 0.35)) == bl)
+  }
+
+  test("fused within tail never pairs an id with itself when a sig table repeats it") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
+    val docs = (Seq((1L, base), (2L, base.replace("tonight", "today"))) ++
+      (10L to 30L).map(i =>
+        (i, s"zq${i}a xv${i}b mn${i}c pq${i}d rs${i}e tu${i}f wy${i}g kh${i}j")))
+      .toDF("doc_id", "text")
+    val sigs = Dedup.minHashSigTable(docs, "doc_id", "text", 4, 16)
+    // id 1 appears twice with identical content: both rows share every
+    // bucket, the shape that would pair (1, 1)
+    val repeated = sigs.unionByName(sigs.filter($"doc_id" === 1L))
+    val got = Dedup.minHashPairsWithinSigs(repeated, "doc_id", 16, 8, 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(!got.exists { case (a, b) => a == b }, s"self pair emitted: $got")
+    assert(got.contains((1L, 2L)))
+    assert(got.distinct.length == got.length, s"duplicate rows: $got")
+  }
+
+  test("setsLookup admission estimate counts the 8-byte hash per shingle") {
+    assert(Dedup.setsLookupBytes(0L, 0L) == 0L)
+    assert(Dedup.setsLookupBytes(10L, 1L) == 10L + 24L + 8L)
+    // 6-char shingles at the 1 GiB bound: chars + 24 B/shingle alone fits,
+    // the hash array the lookup builds pushes it over
+    val n = (1L << 30) / 30
+    assert(6L * n + 24L * n <= (1L << 30))
+    assert(Dedup.setsLookupBytes(6L * n, n) > (1L << 30))
   }
 
   test("simhash of near-identical docs differs in few bits") {
